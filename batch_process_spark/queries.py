@@ -80,181 +80,9 @@ import weakref  # noqa: E402
 _SESSION_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
-# --- scan-layout repair cache (opt-in: SPARK_GRAFT_LAYOUT_CACHE=1) --------
-#
-# Parquet cannot split below row-group granularity, and the driver's
-# testdata ships one row group per table — so every scan runs as 1-3
-# tasks regardless of maxPartitionBytes, capping map parallelism at a
-# fraction of the machine (BASELINE §3: a testdata artifact; a real
-# corpus has thousands of row groups). For repeated-query workloads
-# (bench) the engine repairs the layout ONCE per process: tables whose
-# scan parallelism is below cores/4 are rewritten into a core-aligned
-# multi-file parquet copy under a temp dir (keyed on source
-# path+mtime+size, removed at interpreter exit) and served from there —
-# the same move as a warehouse's ingest-time clustering/OPTIMIZE step.
-# Off by default: one-shot runs (driver correctness checks, tests)
-# would pay the rewrite without amortizing it.
-_LAYOUT_DIR: str | None = None
-
-
-def _layout_dir() -> str:
-    global _LAYOUT_DIR
-    if _LAYOUT_DIR is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        _LAYOUT_DIR = tempfile.mkdtemp(prefix="bps_layout_")
-        atexit.register(shutil.rmtree, _LAYOUT_DIR, ignore_errors=True)
-    return _LAYOUT_DIR
-
-
-# Hot-key bucketing for the layout repair: fact tables are rewritten
-# BUCKETED on their primary aggregation/join key, so repeated queries
-# that group or equi-join on that key read a scan whose
-# outputPartitioning already satisfies the aggregate's required
-# distribution — the exchange (and with it a whole stage per query)
-# disappears. This is the ingest-time move every 100 TB warehouse
-# makes (Hive/Spark bucketing, Delta liquid clustering): pay one
-# clustered write, then every downstream groupBy/join on the key is
-# exchange-free. Keys: events.user_id (per-user/file merges, q07-style
-# A3 rewrites), lineitem.l_orderkey (per-order rollups, TPC-H Q3/Q18
-# shapes).
-_BUCKET_KEYS = {"events": "user_id", "lineitem": "l_orderkey"}
-
-# Tables whose queries are dominated by per-row CPU (tokenization,
-# array HOFs, regex extraction), not IO: a 1-task scan of a sub-2 MB
-# file is the right plan for a DIMENSION read once, but the r14
-# whole-catalog sweep measured ~10 text queries running their ENTIRE
-# compute in that one task (q94 1.4 s, q93 1.3 s, q98 1.1 s ...
-# single-task stages) because documents compresses under the
-# tiny-table gate at bench scale. Respread regardless of byte size
-# (still only when the scan arrives under-parallel — the 100 TB case
-# is untouched). embeddings is deliberately NOT here: its heavy-CPU
-# consumers are the bounded pair fan-outs, which spread themselves at
-# the operator (ensure_parallelism in embedding_near_dup_pairs /
-# q245 / q236), while its trivial-matmul consumers (q25/q225/q232)
-# measurably prefer the 1-split scan (respreading embeddings cost
-# q25 +0.09 s from a 7:1 openCost split-packing skew).
-_CPU_HEAVY_TABLES = {"documents"}
-
-
-import threading as _threading
-
-_BUCKET_WRITE_LOCK = _threading.Lock()
-
-
-def _respread_bucketed(
-    spark: SparkSession, name: str, df: DataFrame, key_col: str, target: int, key: str
-) -> DataFrame | None:
-    """Write ``df`` as an external BUCKETED table (1 file per bucket)
-    under the layout dir; returns the catalog-backed frame whose scans
-    expose HashPartitioning(key_col, target). None on any failure —
-    caller falls back to the plain multi-file respread.
-
-    Same-pid writer race (the only one possible — the layout dir is
-    process-local, see the plain path's staging comment): saveAsTable
-    has no atomic staging+rename equivalent, so the check-then-write is
-    serialized under a process lock instead; threads sharing a session
-    then never overwrite each other's in-flight table directory."""
-    import os
-
-    tbl = f"bps_layout_{name}_{key}"
-    try:
-        with _BUCKET_WRITE_LOCK:
-            if not spark.catalog.tableExists(tbl):
-                path = os.path.join(_layout_dir(), f"{name}-bucketed-{key}")
-                (
-                    df.repartition(target, F.col(key_col))
-                    .write.mode("overwrite")
-                    .format("parquet")
-                    .bucketBy(target, key_col)
-                    .option("path", path)
-                    .saveAsTable(tbl)
-                )
-        return spark.table(tbl)
-    except Exception:
-        return None
-
-
-def _respread(spark: SparkSession, sf_dir: str, name: str, df: DataFrame) -> DataFrame:
-    import hashlib
-    import os
-
-    # Target a modest fan-out, not all cores: local task launch costs
-    # ~2-4 ms, so 32-way scans of sub-50 MB tables pay more in task
-    # overhead than they win back in parallel IO (measured: q01 scan
-    # 3 tasks 0.17 s -> 32 tasks 0.20 s, while q21's regex-heavy
-    # documents scan WINS from the spread). 8-way captures most of the
-    # compute parallelism at a quarter of the overhead.
-    cores = spark.sparkContext.defaultParallelism
-    target = int(os.environ.get("SPARK_GRAFT_LAYOUT_PARTS", "0")) or min(8, cores)
-    src = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(src)
-    except OSError:
-        return df
-    key = hashlib.sha1(
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|{target}".encode()
-    ).hexdigest()[:16]
-    # Bucketing is checked BEFORE the tiny-table/parallelism gates: its
-    # win is exchange ELIMINATION on the hot key (a stage per query),
-    # which pays off even for a table small enough that a 1-task scan
-    # would otherwise be the right plan. It has its own UPPER size
-    # gate instead: rewriting is a full-table shuffle into `target`
-    # buckets under a temp dir, which is a repeated-local-workload
-    # optimization — a genuinely large table (the 100 TB case) must
-    # not be opportunistically duplicated at session time; at that
-    # scale bucketing happens at ingest (bucketBy on the real write),
-    # and the plain gates below return the scan untouched.
-    bucket_col = _BUCKET_KEYS.get(name)
-    if bucket_col and bucket_col in df.columns and st.st_size <= 256 * 1024 * 1024:
-        bucketed = _respread_bucketed(spark, name, df, bucket_col, target, key)
-        if bucketed is not None:
-            return bucketed
-    try:
-        nparts = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if nparts >= max(4, target // 2):
-        return df  # already parallel enough (the 100 TB case)
-    if st.st_size < 2 * 1024 * 1024 and name not in _CPU_HEAVY_TABLES:
-        return df  # tiny dims: a 1-task scan is the right plan
-    path = os.path.join(_layout_dir(), f"{name}-{key}")
-    # Atomic publish: write to a staging dir and rename into place only
-    # on success — a partial write (disk full, interrupt) must never be
-    # served as if valid on a later retry. rename() on the same tmpfs
-    # is atomic. The stage name must be unique PER WRITER, not per
-    # process: _layout_dir is process-local, so the only writers that
-    # can race are threads sharing this pid — a pid-keyed name would
-    # have them overwrite each other's half-written staging dir.
-    if not os.path.isdir(path):
-        import uuid
-
-        stage = f"{path}.staging-{uuid.uuid4().hex}"
-        df.repartition(target).write.mode("overwrite").parquet(stage)
-        try:
-            os.rename(stage, path)
-        except OSError:  # concurrent publisher won; serve theirs
-            import shutil
-
-            shutil.rmtree(stage, ignore_errors=True)
-            if not os.path.isdir(path):
-                # Not a lost race — the rename failed for a real reason
-                # (permissions, cross-device). Swallowing it here would
-                # surface later as a confusing missing-path read error.
-                raise
-    return spark.read.parquet(path)
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, respread: bool = True
-) -> DataFrame:
-    """Read table ``name`` with runtime-conf pinning and (opt-in via
-    SPARK_GRAFT_LAYOUT_CACHE) the scan-layout repair. ``respread=False``
-    serves the ORIGINAL file set — required by provenance queries
-    (q78), whose results must reflect the true source files, not the
-    engine's internal layout copy."""
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read table ``name`` (memoized per session) with runtime-conf
+    pinning."""
     try:
         memo = _SESSION_MEMO.setdefault(spark, {})
     except TypeError:  # non-weakref-able session stand-in (test fakes)
@@ -275,7 +103,7 @@ def _t(
         # events/orders/lineitem timestamps from NANOS to MICROS.
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         memo["pinned"] = True
-    key = (sf_dir, name, respread)
+    key = (sf_dir, name)
     if key not in memo:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -283,10 +111,6 @@ def _t(
             # (read as long under nanosAsLong): truncate to micros with
             # integer DIV (matches DuckDB's ns->us truncation exactly).
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        import os
-
-        if respread and os.environ.get("SPARK_GRAFT_LAYOUT_CACHE") == "1":
-            df = _respread(spark, sf_dir, name, df)
         # MICROS-variant timestamps arrive as session-TZ TIMESTAMP via the
         # inferTimestampNTZ=false pin above (UTC session == DuckDB's naive
         # values, and filters stay pushdown-eligible). If an external
@@ -327,7 +151,7 @@ def invalidate_tables(path: str | None = None) -> int:
                 del memo[key]
                 dropped += 1
                 continue
-            sf_dir, name = key[0], key[1]  # table entry: (sf_dir, table[, respread])
+            sf_dir, name = key  # table entry: (sf_dir, table)
             if (
                 path is None
                 or os.path.abspath(sf_dir) == os.path.abspath(path)

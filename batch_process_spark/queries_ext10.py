@@ -11,8 +11,6 @@ double expression, per the catalog's determinism discipline.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -88,12 +86,7 @@ def q161_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.operators.spatial import grid_radius_join
 
     p = customer_lattice(_t(spark, sf_dir, "customer"))
-    # Hot-cell salting is opt-in (SPARK_GRAFT_GRID_SALT=N): identical
-    # pairs, hot-cell tasks bounded at ~1/N (tests/test_skew.py).
-    joined = grid_radius_join(
-        p, p, "y", "x", radius=_GRID_R,
-        salt_buckets=int(os.environ.get("SPARK_GRAFT_GRID_SALT", "1")),
-    )
+    joined = grid_radius_join(p, p, "y", "x", radius=_GRID_R)
     dy = F.col("y") - F.col("y_r")
     dx = F.col("x") - F.col("x_r")
     return (
@@ -508,10 +501,7 @@ def q166_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.operators.graph import copurchase_edges, triangles_per_node
 
     edges = _memoized_persist(copurchase_edges(li, "l_orderkey", "l_partkey"))
-    # Hub salting opt-in, same knob as q149 (see wedge_join docstring).
-    tcnt = triangles_per_node(
-        edges, salt_buckets=int(os.environ.get("SPARK_GRAFT_WEDGE_SALT", "1"))
-    )
+    tcnt = triangles_per_node(edges)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -879,8 +869,8 @@ def _staged_slices(memo: dict, sf_dir: str, prefix: str, build_table, n_slices: 
         import shutil
 
         d = tempfile.mkdtemp(prefix=prefix)
-        # reclaim the staged copy at interpreter exit (the _layout_dir
-        # discipline); in-session invalidation is release_staged_slices
+        # reclaim the staged copy at interpreter exit; in-session
+        # invalidation is release_staged_slices
         atexit.register(shutil.rmtree, d, ignore_errors=True)
         memo[key] = d
     tbl = build_table(sf_dir)

@@ -731,10 +731,9 @@ def q78_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-in-file behavior is pytest-verified."""
     from batch_process_spark.operators.columns import with_provenance
 
-    # respread=False: provenance must name the TRUE source files — the
-    # layout-repair copy (r14: documents is respread as a CPU-heavy
-    # table) would surface its internal part-file names instead.
-    docs = with_provenance(_t(spark, sf_dir, "documents", respread=False))
+    # provenance relies on _t() reading the table's own files, so the
+    # names it reports are the true source shards
+    docs = with_provenance(_t(spark, sf_dir, "documents"))
     return (
         docs.withColumn(
             "source_file", F.regexp_extract("source_file", r"([^/]+)$", 1)

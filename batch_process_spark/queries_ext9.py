@@ -14,8 +14,6 @@ and identical in any engine with partitioned windows.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -911,8 +909,8 @@ def q149_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an equi-join at EDGE granularity: no node ever sees more than
     its neighborhood, no adjacency matrix, no driver state — the shape
     that scales to billions of edges. Wedge skew on hub nodes is the
-    known hot spot; middle-vertex salting is WIRED (opt-in
-    SPARK_GRAFT_WEDGE_SALT via operators/graph.py::wedge_join, which
+    known hot spot; middle-vertex salting is available through the
+    ``salt_buckets`` parameter of operators/graph.py::wedge_join (which
     composes operators/skew.py::salted_join) and pytest-proved to
     bound hub tasks while preserving the exact wedge set."""
     li = (
@@ -927,14 +925,7 @@ def q149_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted via the bounded memo pool (released by invalidate_tables):
     # the edge set feeds the wedge join twice and the closure probe
     edges = _memoized_persist(copurchase_edges(li, "l_orderkey", "l_partkey"))
-    # Hub salting is opt-in (SPARK_GRAFT_WEDGE_SALT=N): identical
-    # output, hub wedge tasks bounded at ~1/N — pytest-proved in
-    # tests/test_skew.py::test_wedge_join_salting_bounds_hub_tasks.
-    tcnt = triangles_per_node(
-        edges,
-        salt_buckets=int(os.environ.get("SPARK_GRAFT_WEDGE_SALT", "1")),
-        count_col="n_triangles",
-    )
+    tcnt = triangles_per_node(edges, count_col="n_triangles")
     return (
         tcnt.select(F.col("node").alias("l_partkey"), "n_triangles")
         .orderBy(F.desc("n_triangles"), F.asc("l_partkey"))
@@ -1217,7 +1208,7 @@ def q153_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         import shutil
 
         pair = (tempfile.mkdtemp(prefix="q153_imp_"), tempfile.mkdtemp(prefix="q153_clk_"))
-        for d in pair:  # reclaim at interpreter exit (_layout_dir discipline)
+        for d in pair:  # reclaim at interpreter exit
             atexit.register(shutil.rmtree, d, ignore_errors=True)
         _Q153_DIRS["dirs"] = pair
     di, dc = _Q153_DIRS["dirs"]

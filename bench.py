@@ -44,11 +44,6 @@ BENCH_QUERIES = [
 
 
 def main() -> None:
-    # Scan-layout repair (queries._respread): the driver testdata ships
-    # ONE row group per table, capping every scan at 1-3 tasks; the
-    # bench is a repeated-query workload, so repair the layout once
-    # (cold trial 1 pays the rewrite; it rides in queries_cold).
-    os.environ.setdefault("SPARK_GRAFT_LAYOUT_CACHE", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -65,14 +60,13 @@ def main() -> None:
     # wants; this is per-workload tuning the engine exposes, not a
     # different engine.
     # Shuffle partitions right-sized to the WORKLOAD, not the core
-    # count: sf0.1 is ~25 MB across 8-way repaired files, so 32 reduce
-    # tasks per exchange are pure task-launch overhead (measured: q18
-    # 0.345 -> 0.173 s, q29 0.318 -> 0.172 s at 8 partitions). This is
-    # the same right-sizing AQE's partition coalescing performs at
-    # runtime on a cluster (where it IS enabled — session.py default);
-    # with AQE off for the bench, the static conf carries it. Override
-    # with SPARK_GRAFT_SHUFFLE; scales with sf via the layout fan-out.
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "0")) or min(8, int(cpus))
+    # count: sf0.1 is ~25 MB, so 32 reduce tasks per exchange are pure
+    # task-launch overhead (measured: q18 0.345 -> 0.173 s, q29
+    # 0.318 -> 0.172 s at 8 partitions). This is the same right-sizing
+    # AQE's partition coalescing performs at runtime on a cluster
+    # (where it IS enabled — session.py default); with AQE off for the
+    # bench, the static conf carries it.
+    shuffle = min(8, int(cpus))
     # Driver-JVM floor tuning (measured on the bench host: 1-stage job
     # floor 52 ms -> ~21 ms): a 48 GiB heap makes every young GC long
     # enough to sit inside the per-job scheduling path, so size the

@@ -20,10 +20,6 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-# match the bench/driver environment: repaired scan layout
-import os as _os
-_os.environ.setdefault("SPARK_GRAFT_LAYOUT_CACHE", "1")
-
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"

@@ -17,10 +17,6 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-# match the bench/driver environment: repaired scan layout
-import os as _os
-_os.environ.setdefault("SPARK_GRAFT_LAYOUT_CACHE", "1")
-
 
 def read_events(app_id: str):
     # rolling event-log layout (Spark 4 default); fall back to the

@@ -170,12 +170,11 @@ def test_invalidate_tables_drops_memo(spark):
     # >= 1, not == 1: a table-file path also drops this sf_dir's
     # plan-cache entries (any cached query may read the rewritten table)
     assert invalidate_tables(f"{sf}/region.parquet") >= 1
-    # table memo keys are (sf_dir, name, respread) since r14
-    assert (sf, "region", True) not in _SESSION_MEMO[spark]
+    assert (sf, "region") not in _SESSION_MEMO[spark]
     # other TABLE memos survive
-    assert (sf, "nation", True) in _SESSION_MEMO[spark]
+    assert (sf, "nation") in _SESSION_MEMO[spark]
     assert not any(
         k[0] == "__plan__" and k[2] == sf for k in _SESSION_MEMO[spark]
     ), "plan-cache entries for the touched sf_dir must be dropped"
     assert invalidate_tables(sf) >= 1  # whole-dir form drops the rest
-    assert (sf, "nation", True) not in _SESSION_MEMO[spark]
+    assert (sf, "nation") not in _SESSION_MEMO[spark]

@@ -494,36 +494,6 @@ def test_inline_local_type_roundtrip(spark):
     assert got == want
 
 
-def test_layout_bucketed_respread_kills_exchanges(spark, tmp_path, monkeypatch):
-    """The layout repair writes hot-key fact tables BUCKETED: a groupBy
-    on the bucket key (or a superset) then needs NO exchange — q07's
-    two-stage merge collapses to a single exchange-free stage, and the
-    bucketed copy holds exactly the source rows."""
-    from batch_process_spark.queries import _respread, invalidate_tables
-
-    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_CACHE", "1")
-    invalidate_tables()
-    try:
-        src = spark.read.parquet(f"{SF}/events.parquet")
-        out = _respread(spark, SF, "events", src)
-        # catalog-backed bucketed table, same rows
-        assert out.count() == src.count()
-        assert sorted(out.select("event_id").toPandas()["event_id"]) == sorted(
-            src.select("event_id").toPandas()["event_id"]
-        )
-        agg = out.groupBy("user_id").count()
-        plan = plan_of(agg)
-        assert "Exchange" not in plan.split("\n\n")[0], (
-            "bucketed scan must satisfy the groupBy distribution:\n" + plan
-        )
-        # superset grouping keys are satisfied too (q07 stage 1)
-        agg2 = out.groupBy("user_id", "event_type").count()
-        assert "Exchange" not in plan_of(agg2).split("\n\n")[0]
-    finally:
-        invalidate_tables()
-        monkeypatch.delenv("SPARK_GRAFT_LAYOUT_CACHE")
-
-
 def test_q206_adc_lut_broadcast_no_cartesian(spark, qs):
     """The PQ ADC search joins the codes frame to the query LUT via a
     BROADCAST (the LUT is queries x m x k, corpus-independent); the
@@ -793,3 +763,43 @@ def test_cached_plan_aqe_conf_right_sizes_memoized_frames(spark):
         assert df.rdd.getNumPartitions() < static
     finally:
         df.unpersist()
+
+
+def test_bench_queries_invariant_to_partitioning_and_aqe(spark, qs):
+    """A result must not depend on physical choices: the timed query set
+    returns the same canonical values (``canon_pandas``: sorted,
+    stringified ``toPandas()``) under the session default, one shuffle partition
+    with AQE off, and 32 shuffle partitions with AQE on. The plan cache
+    and the persisted memos are dropped between settings, so each one
+    plans and executes from scratch."""
+    import os
+
+    import bench
+    from scripts.selfcheck import canon_pandas
+
+    from batch_process_spark.queries import invalidate_tables
+
+    sf = os.path.join(os.path.dirname(SF), "sf0.01")
+    settings = [
+        {},
+        {"spark.sql.shuffle.partitions": "1", "spark.sql.adaptive.enabled": "false"},
+        {"spark.sql.shuffle.partitions": "32", "spark.sql.adaptive.enabled": "true"},
+    ]
+    touched = {k for s in settings for k in s}
+    saved = {k: spark.conf.get(k) for k in touched}
+    results = []
+    try:
+        for conf in settings:
+            invalidate_tables()
+            for k in touched:
+                spark.conf.set(k, conf.get(k, saved[k]))
+            results.append(
+                {n: canon_pandas(qs[n](spark, sf).toPandas()) for n in bench.BENCH_QUERIES}
+            )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        invalidate_tables()
+    for conf, got in zip(settings[1:], results[1:]):
+        differ = [n for n in bench.BENCH_QUERIES if got[n] != results[0][n]]
+        assert not differ, f"{conf} changed the results of {differ}"
