@@ -38,6 +38,7 @@ its analytics stop at pandas group-bys.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -388,41 +389,17 @@ def _span_scale_parts(docs: DataFrame) -> int | None:
     return n
 
 
-def _span_memo_level(spark):
-    """Storage level for the memoized occurrence frame. SERIALIZED
-    memory+disk by default (PySpark's ``MEMORY_AND_DISK``): the frame
-    is two longs x tens of millions of rows whose on-heap deserialized
-    cache was measured as the q219 GC-variance driver (§5ad, 30-80 s
-    trial spread at 1M docs); the serialized form trades a cheap
-    decode on each of the 2-4 branch reads for a flat heap profile.
-    Override with spark.batchprocess.spanMemoLevel=MEMORY_AND_DISK_DESER
-    (DataFrame.persist()'s default) for the A/B.
-
-    r14 same-host 4-trial pair (VERDICT r13 item 8, q219 at 1M docs,
-    fresh JVM per side): MEMORY_AND_DISK min 15.4 s band 1.58;
-    MEMORY_AND_DISK_DESER min 15.5 s band 2.12 — mins tie, the
-    serialized default keeps the tighter band (the §5ad GC-variance
-    rationale), so the default stands."""
-    from pyspark import StorageLevel
-
-    # PySpark naming: MEMORY_AND_DISK is the SERIALIZED level;
-    # MEMORY_AND_DISK_DESER is DataFrame.persist()'s default
-    name = "MEMORY_AND_DISK"
-    try:
-        name = spark.conf.get("spark.batchprocess.spanMemoLevel", name)
-    except Exception:
-        pass
-    level = getattr(StorageLevel, name, None)
-    if not isinstance(level, StorageLevel):
-        valid = sorted(
-            k for k, v in vars(StorageLevel).items()
-            if isinstance(v, StorageLevel)
-        )
-        raise ValueError(
-            f"spark.batchprocess.spanMemoLevel={name!r} is not a "
-            f"pyspark StorageLevel; accepted values: {', '.join(valid)}"
-        )
-    return level
+# Storage level for the memoized occurrence frame: SERIALIZED
+# memory+disk (PySpark's MEMORY_AND_DISK; DataFrame.persist()'s default
+# is MEMORY_AND_DISK_DESER). The frame is two longs x tens of millions
+# of rows whose on-heap deserialized cache was measured as the q219
+# GC-variance driver (§5ad, 30-80 s trial spread at 1M docs); the
+# serialized form trades a cheap decode on each of the 2-4 branch
+# reads for a flat heap profile. r14 same-host 4-trial pair (q219 at
+# 1M docs, fresh JVM per side): MEMORY_AND_DISK min 15.4 s band 1.58;
+# MEMORY_AND_DISK_DESER min 15.5 s band 2.12 -- mins tie, the
+# serialized level keeps the tighter band.
+_SPAN_MEMO_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 def _span_occ(docs: DataFrame) -> DataFrame:
@@ -441,7 +418,7 @@ def _span_occ(docs: DataFrame) -> DataFrame:
     Round 12: the exchange SELF-SIZES above the small-corpus gate
     (``_span_occ_partitions`` — estimated span rows / 500k per
     reducer, capped at 2048), and the cache is stored SERIALIZED
-    (``_span_memo_level``) to flatten the GC profile the §5ad variance
+    (``_SPAN_MEMO_LEVEL``) to flatten the GC profile the §5ad variance
     came from. Sizing jobs (a metadata count + a per-partition-heads
     width sample) run on sizing-memo miss only.
 
@@ -465,7 +442,7 @@ def _span_occ(docs: DataFrame) -> DataFrame:
     )
     out = _SPAN_MEMO.put(
         key, docs.sparkSession, base,
-        storage_level=_span_memo_level(docs.sparkSession),
+        storage_level=_SPAN_MEMO_LEVEL,
     )
     if n:
         # Round 14 (VERDICT r13 item 6): eager-materialize ABOVE the

@@ -9,6 +9,16 @@ Defaults are tuned so that the same code runs correctly on local[N]
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB correctness oracle.
 - Arrow enabled for all pandas interchange (Pandas UDFs, toPandas).
+- Python workers fork from the engine's own daemon
+  (``batch_process_spark.pydaemon``). Stock PySpark makes every
+  ``zipimporter`` over ``pyspark.zip`` re-read the archive directory on
+  every Python task (about 130 ms a task on Python 3.11, 4-vCPU VM); the engine's
+  daemon re-reads an archive only when it changed. The directory that
+  holds the package goes on ``spark.executorEnv.PYTHONPATH`` so the
+  daemon (and the engine's UDFs, which cloudpickle pickles by
+  reference) import wherever the driver runs. Deployment rule: on a
+  cluster the package must be importable on the executors, either
+  installed there or shipped with ``--py-files``.
 """
 
 from __future__ import annotations
@@ -18,6 +28,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = max(8, os.cpu_count() or 8)
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -90,9 +101,14 @@ def get_spark(
         # local test shape) parallel across all cores; harmless for big
         # files (row-group granularity governs anyway)
         "spark.sql.files.maxPartitionBytes": "32m",
+        # the engine's worker daemon (module docstring)
+        "spark.python.daemon.module": "batch_process_spark.pydaemon",
     }
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, [_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")])
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

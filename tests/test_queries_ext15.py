@@ -539,7 +539,7 @@ def test_span_occ_exchange_self_sizing(spark, monkeypatch):
     """r11 verdict item 2: the memoized occurrence exchange sizes its
     partition count from estimated span rows — None (session default)
     below the gate, est/target above it, capped at 2048 — and the
-    serialized storage level resolves with a conf override."""
+    memo is persisted at the serialized storage level."""
     from pyspark import StorageLevel
 
     from batch_process_spark import queries_ext15 as q15
@@ -566,14 +566,10 @@ def test_span_occ_exchange_self_sizing(spark, monkeypatch):
     # empty frame -> no sizing jobs beyond the count
     assert q15._span_occ_partitions(docs.filter("doc_id < 0")) is None
 
-    # storage level: serialized default, conf override honored
-    assert q15._span_memo_level(spark) == StorageLevel.MEMORY_AND_DISK
-    spark.conf.set("spark.batchprocess.spanMemoLevel", "MEMORY_AND_DISK_DESER")
-    try:
-        lvl = q15._span_memo_level(spark)
-        assert lvl == StorageLevel.MEMORY_AND_DISK_DESER
-    finally:
-        spark.conf.unset("spark.batchprocess.spanMemoLevel")
+    # storage level: the memo is persisted serialized
+    q15.release_span_caches()
+    assert q15._span_occ(docs).storageLevel == StorageLevel.MEMORY_AND_DISK
+    q15.release_span_caches()
 
 
 def test_span_width_estimator_debiased(spark, tmp_path):
@@ -695,22 +691,6 @@ def test_span_occ_eager_materialization_above_gate(spark, monkeypatch, tmp_path)
     eager_head = above_cache(occ_eager.distinct())
     assert "Exchange" not in eager_head, eager_head
     q15.release_span_caches()
-
-
-def test_span_memo_level_bad_value_names_the_conf(spark):
-    """Advisor r12: a typo'd spark.batchprocess.spanMemoLevel must fail
-    with a message naming the conf key and the accepted values, not a
-    bare AttributeError."""
-    import pytest as _pytest
-
-    from batch_process_spark import queries_ext15 as q15
-
-    spark.conf.set("spark.batchprocess.spanMemoLevel", "MEMORY_AND_DSIK")
-    try:
-        with _pytest.raises(ValueError, match="spanMemoLevel.*MEMORY_AND_DISK"):
-            q15._span_memo_level(spark)
-    finally:
-        spark.conf.unset("spark.batchprocess.spanMemoLevel")
 
 
 def test_span_family_gated_sizing_preserves_results(spark, monkeypatch, tmp_path):
