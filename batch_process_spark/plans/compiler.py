@@ -36,10 +36,18 @@ import json
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from batch_process_spark.plans.registry import INLINE, POST, PRE, REGISTRY, Registry
-from batch_process_spark.sources.filetree import match_rule
+from batch_process_spark.sources.filetree import arrow_frame, match_rule
+
+# one row per stage: the run record ``Pipeline.run`` returns
+_RECORD_SCHEMA = pa.schema(
+    [("step", pa.int32()), ("phase", pa.string()), ("pattern", pa.string()),
+     ("processor", pa.string()), ("status", pa.string()), ("error", pa.string()),
+     ("timestamp", pa.string())]
+)
 
 
 def load_config(path: str) -> dict:
@@ -157,14 +165,20 @@ class Pipeline:
         return out
 
     def explain(self, tree: DataFrame) -> list[tuple[dict, str]]:
-        """Per-stage Catalyst plan of the matched-files frame."""
+        """Per-stage Catalyst plan of the matched-files frame.
+
+        Extended mode (parsed, analysed, optimised, physical): over a
+        local relation such as ``file_tree_df``'s listing the optimiser
+        evaluates the rule filter on the driver, so only the analysed
+        plan still shows it.
+        """
         out = []
         for st in self.stages:
             frame = tree if st.pattern is None else tree.filter(match_rule(st.pattern))
             try:
                 jvm = frame.sparkSession._jvm
                 plan = jvm.PythonSQLUtils.explainString(
-                    frame._jdf.queryExecution(), "simple"
+                    frame._jdf.queryExecution(), "extended"
                 )
             except Exception:
                 plan = str(frame._jdf.queryExecution())
@@ -230,11 +244,7 @@ class Pipeline:
                 rec["status"] = "failed"
                 rec["error"] = f"{type(exc).__name__}: {exc}"
             results.append(rec)
-        results_df = spark.createDataFrame(
-            [tuple(r.values()) for r in results],
-            "step int, phase string, pattern string, processor string, "
-            "status string, error string, timestamp string",
-        )
+        results_df = arrow_frame(spark, _RECORD_SCHEMA, [tuple(r.values()) for r in results])
         return PipelineResult(results_df, outputs, self.stages)
 
 

@@ -5,15 +5,19 @@
   ``size``, ``mtime``, ``ext``, ``name``. Listing happens driver-side
   (metadata only; trees of millions of entries should come from a
   storage inventory / ``binaryFile`` listing instead — the columns and
-  rule semantics are identical).
+  rule semantics are identical). The rows reach Spark as one Arrow
+  table (``arrow_frame``): no Python worker ever runs on the listing.
 - ``match_rule`` — the reference's glob-rule semantics
   (``core/engine.py:439-462``) compiled to a Column predicate:
   ``**`` globstar, ``*``/``?``/``[...]`` within a segment, trailing
   ``/`` = directories only, ``"."`` = the root itself, patterns are
   relative to the scan root.
 - ``read_tree_texts`` — whole-file text per file via Spark's
-  ``binaryFile`` source (distributed read; UTF-8 errors ignored, the
-  reference's ``safe_read_text``).
+  ``binaryFile`` source (distributed read). The UTF-8 decode runs in
+  the JVM and equals Python's ``bytes.decode("utf-8", errors="ignore")``
+  (the reference's ``safe_read_text``) byte for byte.
+- Both sources derive ``name``/``ext``/``level0..N`` from ``relpath``
+  in one shared projection (``_with_tree_columns``).
 - ``label_dimension`` / ``attach_labels`` — the ``_dict.txt`` /
   ``.cate`` label+category enrichment (S12/J1) as a broadcast join.
 """
@@ -23,14 +27,61 @@ from __future__ import annotations
 import os
 import re
 from pathlib import Path
-from typing import Iterator
+from typing import Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators.filtering import scan_char_class, translate_char_class
 
 MAX_LEVELS = 8
+
+
+_LISTING_SCHEMA = pa.schema(
+    [("path", pa.string()), ("relpath", pa.string()), ("is_dir", pa.bool_()),
+     ("size", pa.int64()), ("mtime", pa.int64())]
+)
+
+
+def arrow_frame(spark: SparkSession, schema: pa.Schema, rows: Sequence[tuple]) -> DataFrame:
+    """Driver-side rows -> DataFrame through one Arrow table.
+
+    The frame is a local relation (``LocalTableScan``; past
+    ``spark.sql.execution.arrow.localRelationThreshold`` a JVM RDD of
+    Arrow batches), so scanning it runs JVM tasks only: ``createDataFrame``
+    from a Python list would start a Python task per partition. Works
+    with the Arrow conf off.
+    """
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema))
+
+
+def _with_tree_columns(df: DataFrame, max_levels: int, is_file: str) -> DataFrame:
+    """Append ``name``, ``ext`` and ``level0..level{max_levels-1}``,
+    derived from ``relpath``, in one projection. ``is_file`` is the SQL
+    predicate for rows that get an extension (directories get ``""``);
+    the scan root (relpath ``""``) gets no levels.
+
+    One ``selectExpr``: building the same columns through the Column API
+    costs several times the driver time (a Py4J call per function), and
+    a ``withColumn`` chain re-analyses the plan once per column.
+    """
+    parts = "split(relpath, '/')"
+    name = f"element_at({parts}, -1)"
+    # the CASE guards keep element_at in range under ANSI mode too
+    levels = [
+        f"CASE WHEN relpath != '' AND size({parts}) > {i} THEN element_at({parts}, {i + 1}) END"
+        f" AS level{i}"
+        for i in range(max_levels)
+    ]
+    return df.selectExpr(
+        "*",
+        f"{name} AS name",
+        f"CASE WHEN {is_file} THEN regexp_extract({name}, '[.]([^.]+)$', 1) ELSE '' END AS ext",
+        *levels,
+    )
 
 
 def file_tree_df(
@@ -55,23 +106,8 @@ def file_tree_df(
             rows.append(
                 (str(p), p.relative_to(rootp).as_posix(), False, st.st_size, int(st.st_mtime))
             )
-    df = spark.createDataFrame(
-        rows, "path string, relpath string, is_dir boolean, size long, mtime long"
-    )
-    parts = F.split(F.col("relpath"), "/")
-    df = df.withColumn("name", F.element_at(parts, -1)).withColumn(
-        "ext",
-        F.when(
-            F.col("name").contains(".") & ~F.col("is_dir"),
-            F.regexp_extract(F.col("name"), r"\.([^.]+)$", 1),
-        ).otherwise(F.lit("")),
-    )
-    for i in range(max_levels):
-        df = df.withColumn(
-            f"level{i}",
-            F.when((F.col("relpath") != "") & (F.size(parts) > i), F.element_at(parts, i + 1)),
-        )
-    return df
+    df = arrow_frame(spark, _LISTING_SCHEMA, rows)
+    return _with_tree_columns(df, max_levels, "NOT is_dir")
 
 
 def glob_to_tree_regex(pattern: str) -> str:
@@ -132,61 +168,69 @@ def match_rule(pattern: str) -> Column:
     return pred
 
 
+def _decode_utf8_ignore(content: str) -> str:
+    """SQL for ``bytes.decode("utf-8", errors="ignore")`` of a binary
+    column, evaluated in the JVM.
+
+    Valid input is cast as is. Otherwise ``make_valid_utf8`` replaces each
+    maximal invalid subpart with U+FFFD (Python's ``errors="replace"``
+    rule) and the inserted U+FFFDs are dropped. Literal U+FFFDs and the
+    escape ``chr(1)`` are escaped first (``chr(1)`` -> ``chr(1) '0'``,
+    U+FFFD -> ``chr(1) '1'``) so they survive the drop. The escape is
+    ASCII, so its byte never sits inside a multi-byte sequence and
+    escaping cannot regroup the invalid bytes around it; every ``chr(1)``
+    in the escaped text starts a pair, so the unescape is unambiguous.
+    """
+    raw = f"CAST({content} AS STRING)"  # no validation: the bytes as they are
+    escaped = f"replace(replace({raw}, chr(1), chr(1) || '0'), '\ufffd', chr(1) || '1')"
+    dropped = f"replace(make_valid_utf8({escaped}), '\ufffd', '')"
+    kept = f"replace(replace({dropped}, chr(1) || '1', '\ufffd'), chr(1) || '0', chr(1))"
+    return f"CASE WHEN is_valid_utf8({raw}) THEN {raw} ELSE {kept} END"
+
+
+def _qualified_prefix(spark: SparkSession, root: str) -> str:
+    """``root`` as Spark's file index qualifies it (Hadoop
+    ``makeQualified``), with a trailing ``/``: the prefix of every listed
+    ``path``, whatever the scheme, and not resolved through symlinks."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(root)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    q = fs.makeQualified(jpath).toString()
+    return q if q.endswith("/") else q + "/"
+
+
 def read_tree_texts(
     spark: SparkSession, root: str, glob: str | None = None, max_levels: int = MAX_LEVELS
 ) -> DataFrame:
     """Distributed whole-file text read under ``root`` (files only).
 
-    Uses the binaryFile source (pushdown on pathGlobFilter) + UTF-8
-    decode with errors ignored — the reference's lenient
-    ``safe_read_text`` (``utils/io_helpers.py:5-9``).
+    Uses the binaryFile source (pushdown on pathGlobFilter) + a JVM-side
+    UTF-8 decode equal to ``errors="ignore"`` — the reference's lenient
+    ``safe_read_text`` (``utils/io_helpers.py:5-9``). ``root`` may be a
+    local path or any Hadoop URI (``file://``, ``hdfs://``, ``s3a://``);
+    ``relpath`` is relative to ``root`` as given (a symlinked root is not
+    resolved), ``path`` drops the ``file:`` scheme.
 
-    Note: Spark's file index skips ``_``- and ``.``-prefixed names
-    (Hadoop metadata convention), so control files like ``_dict.txt``
-    are invisible here — by design: they are read driver-side by
-    ``label_dimension`` (os.walk), which does see them.
+    Contract on skipped files: Spark's file index skips ``_``- and
+    ``.``-prefixed names (Hadoop metadata convention), so control files
+    like ``_dict.txt`` are invisible here — by design: they are read
+    driver-side by ``label_dimension`` (os.walk), which does see them.
+    Zero-byte files get no row either (the file scan drops empty files),
+    although ``file_tree_df`` lists them and the reference reads them
+    as ``""``.
     """
-    import pandas as pd
-
     reader = (
         spark.read.format("binaryFile").option("recursiveFileLookup", "true")
     )
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    bin_df = reader.load(root).select(
-        F.col("path"), F.col("length").alias("size"), F.col("content")
+    prefix = _qualified_prefix(spark, root)
+    df = reader.load(root).selectExpr(
+        "regexp_replace(path, '^file:', '') AS path",
+        f"substring(path, {len(prefix) + 1}) AS relpath",
+        "length AS size",
+        f"{_decode_utf8_ignore('content')} AS text",
     )
-
-    rootstr = str(Path(root).resolve())
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            texts = [
-                (bytes(b) if b is not None else b"").decode("utf-8", errors="ignore")
-                for b in pdf["content"]
-            ]
-            paths = [re.sub(r"^file:", "", p) for p in pdf["path"]]
-            rels = [
-                os.path.relpath(p, rootstr).replace(os.sep, "/") for p in paths
-            ]
-            yield pd.DataFrame(
-                {"path": paths, "relpath": rels, "size": pdf["size"], "text": texts}
-            )
-
-    df = bin_df.mapInPandas(decode, "path string, relpath string, size long, text string")
-    parts = F.split(F.col("relpath"), "/")
-    df = df.withColumn("name", F.element_at(parts, -1)).withColumn(
-        "ext",
-        F.when(
-            F.col("name").contains("."),
-            F.regexp_extract(F.col("name"), r"\.([^.]+)$", 1),
-        ).otherwise(F.lit("")),
-    )
-    for i in range(max_levels):
-        df = df.withColumn(
-            f"level{i}", F.when(F.size(parts) > i, F.element_at(parts, i + 1))
-        )
-    return df
+    return _with_tree_columns(df, max_levels, "TRUE")
 
 
 # ---------------------------------------------------------------------------
@@ -210,6 +254,11 @@ def parse_dict_text(text: str) -> list[tuple[str, str]]:
     return out
 
 
+_LABEL_SCHEMA = pa.schema(
+    [("dir", pa.string()), ("name", pa.string()), ("label", pa.string()), ("category", pa.string())]
+)
+
+
 def label_dimension(
     spark: SparkSession, root: str, dict_name: str = "_dict.txt", category_suffix: str = ".cate"
 ) -> DataFrame:
@@ -228,9 +277,7 @@ def label_dimension(
             text = (Path(dirpath) / dict_name).read_text(encoding="utf-8", errors="ignore")
             for name, label in parse_dict_text(text):
                 rows.append((reldir, name, label, category))
-    return spark.createDataFrame(
-        rows, "dir string, name string, label string, category string"
-    )
+    return arrow_frame(spark, _LABEL_SCHEMA, rows)
 
 
 def attach_labels(tree: DataFrame, dim: DataFrame) -> DataFrame:
