@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from batch_process_spark.operators.caching import memoized_persist
+
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition up if the input arrived in fewer partitions than the
@@ -363,37 +365,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return inter / (F.size(a) + F.size(b) - inter)
 
 
-# Memo of persisted shingle frames keyed on (input plan semantic hash,
-# id_col, text_col, k), bounded LRU. Repeated invocations over the same
-# input plan (bench trials, candidate-then-verify pipelines, iterative
-# threshold sweeps) reuse one persisted shingle pass instead of paying
-# drop+re-persist per call. Entries are validated against the live
-# SparkSession (a stale session's cache is discarded, not reused).
-# If the underlying files are rewritten mid-session (e.g. by
-# compact_parquet) call release_shingle_caches() to invalidate.
-from batch_process_spark.operators.caching import PersistMemo  # noqa: E402
-
-_SHINGLE_MEMO = PersistMemo(max_entries=4)
-
-
-def release_shingle_caches() -> None:
-    """Unpersist and drop every memoized shingle frame. Call after
-    rewriting the underlying files mid-session."""
-    _SHINGLE_MEMO.release_all()
-
-
-def _memoized_shingle_frame(
-    base: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int = 16
-) -> DataFrame:
-    key = PersistMemo.plan_key(base, id_col, text_col, k, num_hashes)
-    hit = _SHINGLE_MEMO.get(key, base.sparkSession)
-    if hit is not None:
-        return hit
-    return _SHINGLE_MEMO.put(
-        key, base.sparkSession, shingle_sig_frame(base, id_col, text_col, k, num_hashes)
-    )
-
-
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -419,7 +390,10 @@ def minhash_near_dup_pairs(
     # entry then recomputes lazily instead of reading cache).
     # Signatures are computed INSIDE the kernel (map-only): the only
     # wide stage in the whole pipeline is the banded candidate join.
-    sh = _memoized_shingle_frame(base, id_col, text_col, k, num_hashes)
+    sh = memoized_persist(
+        base, id_col, text_col, k, num_hashes,
+        build=lambda: shingle_sig_frame(base, id_col, text_col, k, num_hashes),
+    )
     # Empty/non-alphanumeric docs all carry the identical sentinel
     # signature ([P]*n) and would collide in EVERY band — O(E^2)
     # candidate pairs among E empty docs, pruned only post-join because
@@ -465,7 +439,10 @@ def minhash_candidate_audit(
     stage); the histogram adds one decile-keyed partial agg plus a
     1-row total broadcast."""
     base = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    sh = _memoized_shingle_frame(base, id_col, text_col, k, num_hashes)
+    sh = memoized_persist(
+        base, id_col, text_col, k, num_hashes,
+        build=lambda: shingle_sig_frame(base, id_col, text_col, k, num_hashes),
+    )
     sigs = sh.filter(F.size("shingles") > 0).select(F.col(id_col), F.col("sig"))
     cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
     js = (

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from batch_process_spark.catalog import TableStore
+from batch_process_spark.operators import caching
 from batch_process_spark.operators.filtering import filter_dataframe, select_records
 from batch_process_spark.operators.grouping import merge_results
 from batch_process_spark.operators.joins import enrich_labels
@@ -132,8 +133,10 @@ def invalidate_tables(path: str | None = None) -> int:
     file listing, so a directory rewritten mid-session — e.g. by
     ``compact_parquet`` or the CDC upsert sink — serves deleted-file
     errors or stale data until invalidated). ``path`` may be an sf dir
-    or a single ``<table>.parquet`` path; None drops everything.
-    Returns the number of entries dropped."""
+    or a single ``<table>.parquet`` path; None drops everything. Every
+    cached query plan and every cache in ``operators.caching`` (the
+    persisted frames and staged slices) is dropped regardless of
+    ``path``. Returns the number of table and plan entries dropped."""
     import os
 
     dropped = 0
@@ -142,10 +145,10 @@ def invalidate_tables(path: str | None = None) -> int:
             if key == "pinned":
                 continue
             if key[0] == "__plan__":
-                # Plan-cache entries drop UNCONDITIONALLY: the shingle/tf
-                # persist memos below are released globally (their keys
-                # can't be mapped back to paths), so a surviving cached
-                # query plan would reference unpersisted frames forever —
+                # Plan-cache entries drop UNCONDITIONALLY: the session
+                # caches below are released globally (their keys can't
+                # be mapped back to paths), so a surviving cached query
+                # plan would reference unpersisted frames forever —
                 # recomputing its wide stages on every call with no way
                 # to refill the memo. Plans are cheap to rebuild.
                 del memo[key]
@@ -159,49 +162,7 @@ def invalidate_tables(path: str | None = None) -> int:
             ):
                 del memo[key]
                 dropped += 1
-    # The dedup shingle memo persists frames keyed on plan semantic
-    # hashes — those plans snapshot the same file listings, but the
-    # hash can't be mapped back to a path, so any table invalidation
-    # releases them all (over-broad, never stale).
-    from batch_process_spark.operators.dedup import release_shingle_caches
-
-    release_shingle_caches()
-    try:  # q96's tf memo (import-guarded: ext5 may not be loaded)
-        from batch_process_spark.queries_ext5 import release_tf_caches
-
-        release_tf_caches()
-    except ImportError:
-        pass
-    try:  # the span-family occurrence memo (q207/q219/q240/q247)
-        from batch_process_spark.queries_ext15 import release_span_caches
-
-        release_span_caches()
-    except ImportError:
-        pass
-    try:  # q102's grams memo (import-guarded: ext6 may not be loaded)
-        from batch_process_spark.queries_ext6 import release_gram_caches
-
-        release_gram_caches()
-    except ImportError:
-        pass
-    try:  # q118's deviation memo (import-guarded: ext7 may not be loaded)
-        from batch_process_spark.queries_ext7 import release_dev_caches
-
-        release_dev_caches()
-    except ImportError:
-        pass
-    try:  # q128's count memo (import-guarded: ext8 may not be loaded)
-        from batch_process_spark.queries_ext8 import release_sketch_caches
-
-        release_sketch_caches()
-    except ImportError:
-        pass
-    try:
-        from batch_process_spark.queries_ext10 import release_staged_slices
-
-        release_staged_slices()
-    except ImportError:
-        pass
+    caching.release_all()
     return dropped
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from batch_process_spark.operators.caching import memoized_persist, staged_slices
 from batch_process_spark.queries import _q, _t
 
 # ---------------------------------------------------------------------------
@@ -490,8 +491,6 @@ def q166_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     no triangles keep coefficient 0 through the LEFT join (coalesce).
     Every stage is edge-granularity — no adjacency matrix, no driver
     state; hub-node wedge skew salts like any hot key."""
-    from batch_process_spark.queries_ext8 import _memoized_persist
-
     li = (
         _t(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") <= 2000)
@@ -500,7 +499,7 @@ def q166_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from batch_process_spark.operators.graph import copurchase_edges, triangles_per_node
 
-    edges = _memoized_persist(copurchase_edges(li, "l_orderkey", "l_partkey"))
+    edges = memoized_persist(copurchase_edges(li, "l_orderkey", "l_partkey"))
     tcnt = triangles_per_node(edges)
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -716,8 +715,6 @@ def q169_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits), ordered by the ROUNDED value then node in BOTH engines so
     the limit cut is deterministic under float sum-order drift. The
     oracle unrolls the 5 iterations as chained CTEs."""
-    from batch_process_spark.queries_ext8 import _memoized_persist
-
     li = (
         _t(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") <= 2000)
@@ -727,7 +724,7 @@ def q169_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.operators.graph import copurchase_edges
 
     e0 = copurchase_edges(li, "l_orderkey", "l_partkey")
-    edges = _memoized_persist(
+    edges = memoized_persist(
         e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
     from batch_process_spark.operators.graph import pagerank
@@ -842,51 +839,6 @@ def q170_hll_week_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q171: streaming near-dup against a static corpus LSH index
 # ---------------------------------------------------------------------------
 
-_Q171_DIRS: dict = {}
-
-
-def _staged_slices(memo: dict, sf_dir: str, prefix: str, build_table, n_slices: int = 3):
-    """The ONE staging protocol for the q171-q173 stream fixtures:
-    ``build_table(sf_dir)`` returns a pyarrow Table, written as
-    ``n_slices`` contiguous parquet slices fed one per micro-batch
-    (driver-side, memoized per sf_dir like the q131/q134 event
-    slices). Returns ``(dir, write_slice)``; when every slice already
-    exists the table is NOT rebuilt and write_slice is a no-op.
-    ``release_staged_slices`` clears the memos on table rewrites."""
-    import os
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    key = os.path.abspath(sf_dir)
-    d = memo.get(key)
-    if d is not None and os.path.isdir(d) and all(
-        os.path.exists(os.path.join(d, f"slice_{i}.parquet")) for i in range(n_slices)
-    ):
-        return d, lambda i: None
-    if d is None or not os.path.isdir(d):
-        import atexit
-        import shutil
-
-        d = tempfile.mkdtemp(prefix=prefix)
-        # reclaim the staged copy at interpreter exit; in-session
-        # invalidation is release_staged_slices
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        memo[key] = d
-    tbl = build_table(sf_dir)
-    n = tbl.num_rows
-    cuts = [round(i * n / n_slices) for i in range(n_slices + 1)]
-
-    def write_slice(i: int) -> None:
-        pq.write_table(
-            tbl.slice(cuts[i], cuts[i + 1] - cuts[i]),
-            os.path.join(d, f"slice_{i}.parquet"),
-        )
-
-    write_slice(0)
-    return d, write_slice
-
-
 def _q171_table(sf_dir: str):
     """Mutated-copy documents (the q18 near-dup mutations: doc_id % 20
     == 0, id + 1000000, suffix appended)."""
@@ -911,7 +863,7 @@ def _q171_table(sf_dir: str):
 
 
 def _q171_slices(sf_dir: str, n_slices: int = 3):
-    return _staged_slices(_Q171_DIRS, sf_dir, "q171_slices_", _q171_table, n_slices)
+    return staged_slices(sf_dir, "q171_slices_", _q171_table, n_slices)
 
 
 def _q171_oracle() -> str:
@@ -1004,9 +956,6 @@ def q171_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q172: streaming top-k similarity serving (foreachBatch over the kernel)
 # ---------------------------------------------------------------------------
 
-_Q172_DIRS: dict = {}
-
-
 def _q172_table(sf_dir: str):
     """Query vectors (vec_id < 15) renamed to the serving schema."""
     import os
@@ -1023,7 +972,7 @@ def _q172_table(sf_dir: str):
 
 
 def _q172_slices(sf_dir: str, n_slices: int = 3):
-    return _staged_slices(_Q172_DIRS, sf_dir, "q172_slices_", _q172_table, n_slices)
+    return staged_slices(sf_dir, "q172_slices_", _q172_table, n_slices)
 
 
 def _q172_oracle() -> str:
@@ -1099,9 +1048,6 @@ def q172_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q173: streaming multimodal ingest — header parse on arriving media
 # ---------------------------------------------------------------------------
 
-_Q173_DIRS: dict = {}
-
-
 def _q173_table(sf_dir: str):
     """200 structurally valid PNG payloads (same dimensions recipe as
     q141's synth_png: w = 16 + id%64, h = 16 + 7id%64, CRCs correct)
@@ -1144,7 +1090,7 @@ def _q173_table(sf_dir: str):
 
 
 def _q173_slices(sf_dir: str, n_slices: int = 3):
-    return _staged_slices(_Q173_DIRS, sf_dir, "q173_slices_", _q173_table, n_slices)
+    return staged_slices(sf_dir, "q173_slices_", _q173_table, n_slices)
 
 
 @_q(
@@ -1464,31 +1410,3 @@ def q177_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("o_totalprice"), 4).alias("hi"),
         )
     )
-
-
-# Every staged-slice memo must live here so release_staged_slices can
-# invalidate it — later catalog modules (e.g. queries_ext15's q214)
-# REGISTER theirs instead of growing this module's tuple by hand.
-_STAGED_SLICE_MEMOS: list = []
-
-
-def register_staged_slice_memo(memo: dict) -> dict:
-    _STAGED_SLICE_MEMOS.append(memo)
-    return memo
-
-
-for _m in (_Q171_DIRS, _Q172_DIRS, _Q173_DIRS):
-    register_staged_slice_memo(_m)
-
-
-def release_staged_slices() -> None:
-    """Drop ALL registered staged micro-batch slice dirs — each
-    snapshots a source table, so after a mid-session table rewrite it
-    would feed the stream stale rows. Called by invalidate_tables
-    (same contract as queries_ext8.release_sketch_caches)."""
-    import shutil
-
-    for dirs in _STAGED_SLICE_MEMOS:
-        for d in dirs.values():
-            shutil.rmtree(d, ignore_errors=True)
-        dirs.clear()

@@ -26,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from batch_process_spark.operators.caching import memoized_persist
 from batch_process_spark.queries import _q, _t
-from batch_process_spark.queries_ext8 import _memoized_persist
 
 # ---------------------------------------------------------------------------
 # q186: bounded-hop cheapest route over the weighted co-purchase graph
@@ -142,7 +142,7 @@ def q186_sssp_cheapest_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from batch_process_spark.operators.graph import sssp_bounded
 
-    edges = _memoized_persist(_sssp_edges(spark, sf_dir))
+    edges = memoized_persist(_sssp_edges(spark, sf_dir))
     seeds = (
         edges.filter(F.col("u") % _SSSP_HUB_MOD == 0)
         .select(F.col("u").alias("node"))
@@ -150,7 +150,7 @@ def q186_sssp_cheapest_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(0).cast("long").alias("cost"))
     )
     out = sssp_bounded(
-        edges, rounds=_SSSP_HOPS, seed=seeds, persist=_memoized_persist
+        edges, rounds=_SSSP_HOPS, seed=seeds, persist=memoized_persist
     )
     return out.select(F.col("node").alias("l_partkey"), F.col("cost").alias("cheapest_cost"))
 
@@ -376,7 +376,7 @@ def q188_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= _SSSP_CAP)
     canon = copurchase_edges(li, "l_orderkey", "l_partkey")
-    edges = _memoized_persist(
+    edges = memoized_persist(
         canon.unionByName(canon.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
     core = kcore_peel(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS)
@@ -398,12 +398,12 @@ def _monthly_revenue_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-cents monthly revenue rollup (y, m, cents) — the shared
     fact-scale first stage of q189/q194/q197, factored to ONE
     definition so the three time-series queries cannot drift apart
-    (an edit here reaches all of them) and ``_memoized_persist`` keys
+    (an edit here reaches all of them) and ``memoized_persist`` keys
     a single materialization they all reuse. Map-side-combined
     groupBy; the result is CALENDAR-BOUNDED (#years x 12 rows
     regardless of SF)."""
     o = _t(spark, sf_dir, "orders")
-    return _memoized_persist(
+    return memoized_persist(
         o.select(
             F.year("o_orderdate").cast("long").alias("y"),
             F.month("o_orderdate").cast("long").alias("m"),
@@ -661,7 +661,7 @@ def q191_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents",
         )
     )
-    cust = _memoized_persist(cust)
+    cust = memoized_persist(cust)
     ql = "array(0.2, 0.4, 0.6, 0.8)"
     b = cust.agg(
         F.expr(f"percentile(rec_days, {ql})").alias("rb"),
@@ -906,7 +906,7 @@ def q194_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     output."""
     monthly = _monthly_revenue_cents(spark, sf_dir)
     moy, tot, idx = _seasonal_index_parts(monthly)
-    des = _memoized_persist(
+    des = memoized_persist(
         monthly.join(F.broadcast(moy), "m")
         .crossJoin(F.broadcast(tot))
         .select("y", "m", "cents", (F.col("cents").cast("double") / idx).alias("x"))
@@ -1295,8 +1295,8 @@ def q198_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.operators.graph import copurchase_edges
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= _SSSP_CAP)
-    canon = _memoized_persist(copurchase_edges(li, "l_orderkey", "l_partkey"))
-    sym = _memoized_persist(
+    canon = memoized_persist(copurchase_edges(li, "l_orderkey", "l_partkey"))
+    sym = memoized_persist(
         canon.unionByName(canon.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
@@ -1419,7 +1419,7 @@ def q199_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation pays a second shuffle for. At 100 TB this plan is:
     one scan, one hash exchange, a 5-row union."""
     docs = _t(spark, sf_dir, "documents")
-    base = _memoized_persist(
+    base = memoized_persist(
         docs.select(
             "doc_id",
             "lang",
@@ -1484,7 +1484,7 @@ def _prep_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("toks") >= _PREP_MIN_TOKS)
     )
     keyed = gated.select("doc_id", "lang", "toks", F.md5("text").alias("k"))
-    surv = _memoized_persist(
+    surv = memoized_persist(
         keyed.groupBy("k").agg(
             F.min_by("lang", "doc_id").alias("lang"),
             F.min_by("toks", "doc_id").alias("toks"),
@@ -1535,7 +1535,7 @@ def q200_split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     — `(n-e)*(n-e)/e`, never `pow`."""
     kept = _prep_survivors(spark, sf_dir)
     cells = kept.groupBy("bucket", "lang").agg(F.count(F.lit(1)).alias("n"))
-    cells = _memoized_persist(cells)
+    cells = memoized_persist(cells)
     tot = cells.agg(F.sum("n").alias("nt"))
     bt = cells.groupBy("bucket").agg(F.sum("n").alias("nb"))
     lt = cells.groupBy("lang").agg(F.sum("n").alias("nl"))

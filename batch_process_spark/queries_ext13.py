@@ -15,8 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from batch_process_spark.operators.caching import memoized_persist
 from batch_process_spark.queries import _q, _t
-from batch_process_spark.queries_ext8 import _memoized_persist
 from batch_process_spark.queries_ext12 import _SSSP_CAP
 
 # ---------------------------------------------------------------------------
@@ -91,7 +91,7 @@ def q201_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= _SSSP_CAP)
     canon = copurchase_edges(li, "l_orderkey", "l_partkey")
-    edges = _memoized_persist(
+    edges = memoized_persist(
         canon.unionByName(canon.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
     return label_propagation(edges, rounds=_LPA_ROUNDS).select(

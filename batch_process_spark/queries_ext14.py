@@ -18,9 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from batch_process_spark.operators.caching import memoized_persist
 from batch_process_spark.operators.dedup import shingles_col, tokens_col
 from batch_process_spark.queries import _q, _t
-from batch_process_spark.queries_ext8 import _memoized_persist
 from batch_process_spark.queries_ext import DUCK_TOKENS, duck_shingles
 
 # ---------------------------------------------------------------------------
@@ -62,7 +62,7 @@ def q202_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join's both sides AND both size lookups — without
     # materialization Spark re-scans and re-distincts the corpus four
     # times (no automatic CTE materialization for shared subplans)
-    sg = _memoized_persist(
+    sg = memoized_persist(
         docs.select(F.col("source"), F.explode(shingles_col("text", 3)).alias("g"))
         .distinct()
     )

@@ -45,8 +45,13 @@ from pyspark.sql import functions as F
 from batch_process_spark.functions.rounding import round_half_up
 from batch_process_spark.operators import pq
 from batch_process_spark.operators import text
+from batch_process_spark.operators.caching import (
+    SPAN_PARTS,
+    PersistMemo,
+    memoized_persist,
+    staged_slices,
+)
 from batch_process_spark.queries import _q, _t
-from batch_process_spark.queries_ext8 import _memoized_persist
 
 _PQ_SUBDIM = 16  # 64-dim embeddings -> m = 4 subspaces
 _PQ_K = 4
@@ -112,7 +117,7 @@ def _codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized PQ codebook over the embeddings table (feeds
     both q205's encode and q206's LUT + codes — trained once)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return _memoized_persist(pq.pq_train(emb, _PQ_SUBDIM, k=_PQ_K, iters=1))
+    return memoized_persist(pq.pq_train(emb, _PQ_SUBDIM, k=_PQ_K, iters=1))
 
 
 # ---------------------------------------------------------------------------
@@ -195,7 +200,7 @@ def q206_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot reorder the cut."""
     emb = _t(spark, sf_dir, "embeddings")
     cb = _codebook(spark, sf_dir)
-    codes = _memoized_persist(pq.pq_encode(emb, cb, _PQ_SUBDIM))
+    codes = memoized_persist(pq.pq_encode(emb, cb, _PQ_SUBDIM))
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -286,19 +291,6 @@ def _span_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-from batch_process_spark.operators.caching import PersistMemo  # noqa: E402
-
-_SPAN_MEMO = PersistMemo(max_entries=2)
-
-
-def release_span_caches() -> None:
-    """Unpersist and drop every memoized span frame (and the sizing
-    memo that rides the same keys). Called by
-    ``queries.invalidate_tables`` after file rewrites."""
-    _SPAN_MEMO.release_all()
-    _SPAN_PARTS.clear()
-
-
 # Self-sizing knobs for the occurrence exchange (r11 verdict item 2):
 # below the gate the session's static shuffle partitions are right
 # (tests/bench: tiny frames, fewer tasks win); above it the partition
@@ -364,28 +356,23 @@ def _span_occ_partitions(docs: DataFrame) -> int | None:
     return min(2048, max(session_parts, -(-est // _SPAN_TARGET_ROWS_PER_PART)))
 
 
-# Sizing memo: the partition estimate keyed like the occurrence memo,
-# so the downstream wide ops (q207/q219/q240/q247) can self-size their
-# exchanges WITHOUT re-running the sizing jobs — r12 applied the
-# estimate only to the memo's own exchange and left the downstream
-# pair-aggregate/window exchanges at the session default, which §5ah
-# measured as the 2M-doc wall (152-211 s vs 63 s correctly sized).
-_SPAN_PARTS: dict[tuple, int | None] = {}
-
-
 def _span_scale_parts(docs: DataFrame) -> int | None:
     """Memoized ``_span_occ_partitions`` for this corpus; None below
     the small-corpus gate (session default partitioning everywhere —
-    the bench/tests shape, plans unchanged)."""
-    spans = _span_frame(docs)
-    key = PersistMemo.plan_key(spans, "h-occ")
-    if key in _SPAN_PARTS:
-        return _SPAN_PARTS[key]
+    the bench/tests shape, plans unchanged). Memoized in
+    ``caching.SPAN_PARTS``, keyed like the occurrence memo, so the
+    downstream wide ops (q207/q219/q240/q247) can self-size their
+    exchanges WITHOUT re-running the sizing jobs — r12 applied the
+    estimate only to the memo's own exchange and left the downstream
+    pair-aggregate/window exchanges at the session default, which §5ah
+    measured as the 2M-doc wall (152-211 s vs 63 s correctly sized)."""
+    key = PersistMemo.plan_key(_span_frame(docs), "h-occ")
+    if key in SPAN_PARTS:
+        return SPAN_PARTS[key]
     n = _span_occ_partitions(docs)
-    if key is not None:
-        while len(_SPAN_PARTS) >= 8:  # bound the memo like _SPAN_MEMO
-            _SPAN_PARTS.pop(next(iter(_SPAN_PARTS)))
-        _SPAN_PARTS[key] = n
+    while len(SPAN_PARTS) >= 8:  # one entry per corpus; a few corpora at most
+        SPAN_PARTS.pop(next(iter(SPAN_PARTS)))
+    SPAN_PARTS[key] = n
     return n
 
 
@@ -404,8 +391,8 @@ _SPAN_MEMO_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 def _span_occ(docs: DataFrame) -> DataFrame:
     """The h-partitioned occurrence-level span frame, PERSISTED once
-    per input plan (PersistMemo — the shingle-frame discipline from
-    operators/dedup.py). Why: the span-family audits (q219/q240/q247)
+    per input plan (``caching.memoized_persist``, like the dedup
+    shingle frame). Why: the span-family audits (q219/q240/q247)
     join this frame to its own aggregates, and Catalyst never
     subtree-reuses across such branches (no ReusedExchange, measured
     round 10) — q247's plan ran the Arrow span kernel FIVE times,
@@ -431,18 +418,18 @@ def _span_occ(docs: DataFrame) -> DataFrame:
     repartitions in each query's plan — execution-context-independent,
     no session conf mutation."""
     spans = _span_frame(docs)
-    key = PersistMemo.plan_key(spans, "h-occ")
-    hit = _SPAN_MEMO.get(key, docs.sparkSession)
-    if hit is not None:
-        return hit
-    n = _span_scale_parts(docs)
-    base = (
-        spans.repartition(n, F.col("h")) if n
-        else spans.repartition(F.col("h"))
-    )
-    out = _SPAN_MEMO.put(
-        key, docs.sparkSession, base,
-        storage_level=_SPAN_MEMO_LEVEL,
+    n = None
+
+    def build() -> DataFrame:
+        nonlocal n
+        n = _span_scale_parts(docs)
+        return (
+            spans.repartition(n, F.col("h")) if n
+            else spans.repartition(F.col("h"))
+        )
+
+    out = memoized_persist(
+        spans, "h-occ", build=build, storage_level=_SPAN_MEMO_LEVEL
     )
     if n:
         # Round 14 (VERDICT r13 item 6): eager-materialize ABOVE the
@@ -761,13 +748,13 @@ def q210_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w_rel = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("vec_id"))
-    cand = _memoized_persist(
+    cand = memoized_persist(
         scored.withColumn("rn", F.row_number().over(w_rel))
         .filter(F.col("rn") <= _MMR_POOL)
         .drop("rn")
     )
     a, b = cand.alias("a"), cand.alias("b")
-    sim = _memoized_persist(
+    sim = memoized_persist(
         a.join(b, F.col("a.query_id") == F.col("b.query_id"))
         .select(
             F.col("a.query_id").alias("query_id"),
@@ -1036,13 +1023,6 @@ def q213_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q214: streaming COMPRESSED serving — PQ/ADC scorer in the serving loop
 # ---------------------------------------------------------------------------
 
-# registered so invalidate_tables -> release_staged_slices drops the
-# staged query slices when the underlying table is rewritten (without
-# this, a mid-session rewrite would serve STALE query vectors while
-# the oracle reads the new table)
-from batch_process_spark.queries_ext10 import register_staged_slice_memo
-
-_Q214_DIRS: dict = register_staged_slice_memo({})
 _Q214_RERANK = 3  # candidates per query = 3 * k = 30
 
 
@@ -1091,7 +1071,7 @@ def q214_streaming_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a value-level oracle, per batch. Per batch the scan touches m
     int64 codes per vector; the float corpus only sees the bounded
     candidate join."""
-    from batch_process_spark.queries_ext10 import _q172_table, _staged_slices
+    from batch_process_spark.queries_ext10 import _q172_table
     from batch_process_spark.streaming.similarity import (
         bounded_collect_sink,
         stream_topk_serving,
@@ -1100,10 +1080,10 @@ def q214_streaming_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cb = _codebook(spark, sf_dir)
-    codes = _memoized_persist(pq.pq_encode_fused(corpus, cb, _PQ_SUBDIM))
+    codes = memoized_persist(pq.pq_encode_fused(corpus, cb, _PQ_SUBDIM))
     scorer = pq.make_adc_scorer(cb, codes, _PQ_SUBDIM, rerank_factor=_Q214_RERANK)
 
-    d, write_slice = _staged_slices(_Q214_DIRS, sf_dir, "q214_slices_", _q172_table)
+    d, write_slice = staged_slices(sf_dir, "q214_slices_", _q172_table)
     stream = (
         spark.readStream.schema("query_id long, embedding array<float>")
         .format("parquet")
@@ -1148,7 +1128,7 @@ _BQ_WORDS_SQL = """
 def _bq_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     w0, w1 = pq.sign_bit_words("embedding", 64)
-    return _memoized_persist(
+    return memoized_persist(
         emb.select("vec_id", "label", w0.alias("w0"), w1.alias("w1"))
     )
 
@@ -1340,7 +1320,7 @@ def q217_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "vec_id", "rank")
 
     cb = _codebook(spark, sf_dir)
-    codes = _memoized_persist(pq.pq_encode(emb, cb, _PQ_SUBDIM))
+    codes = memoized_persist(pq.pq_encode(emb, cb, _PQ_SUBDIM))
     adcs = (
         pq.pq_adc_scores(queries, cb, codes, _PQ_SUBDIM)
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1453,7 +1433,7 @@ def q218_retrieval_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cb = _codebook(spark, sf_dir)
-    codes = _memoized_persist(pq.pq_encode(emb, cb, _PQ_SUBDIM))
+    codes = memoized_persist(pq.pq_encode(emb, cb, _PQ_SUBDIM))
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )

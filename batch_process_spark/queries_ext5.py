@@ -32,34 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from batch_process_spark.operators.caching import memoized_persist
 from batch_process_spark.queries import _q, _t, round_half_up
 from batch_process_spark.queries_ext import DUCK_TOKENS
 
 _TOK = DUCK_TOKENS.format(t="text")
-
-# Plan-keyed memo of persisted tf tables (q96): tf feeds both the
-# scored side and the df aggregate — without a persist the build side's
-# column pruning makes the two tf subplans non-identical, exchange
-# reuse never fires, and the corpus is scanned+exploded twice. Shares
-# the PersistMemo implementation with the dedup shingle memo. Released
-# by queries.invalidate_tables when underlying files are rewritten.
-from batch_process_spark.operators.caching import PersistMemo
-
-_TF_MEMO = PersistMemo(max_entries=2)
-
-
-def release_tf_caches() -> None:
-    """Unpersist and drop every memoized tf frame. Called by
-    invalidate_tables after mid-session file rewrites."""
-    _TF_MEMO.release_all()
-
-
-def _memoized_persist(df: DataFrame) -> DataFrame:
-    key = PersistMemo.plan_key(df)
-    hit = _TF_MEMO.get(key, df.sparkSession)
-    if hit is not None:
-        return hit
-    return _TF_MEMO.put(key, df.sparkSession, df)
 
 # DuckDB word-bigram / word-trigram lists mirroring ngrams_col(text, n)
 # (frequency-preserving, empty when the doc has fewer than n tokens).
@@ -369,7 +346,11 @@ def q96_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.operators.dedup import tokens_col
 
     toks = docs.select("doc_id", F.explode(tokens_col("text")).alias("tok"))
-    tf = _memoized_persist(
+    # tf feeds both the scored side and the df aggregate: without a
+    # persist the build side's column pruning makes the two tf subplans
+    # non-identical, exchange reuse never fires, and the corpus is
+    # scanned+exploded twice
+    tf = memoized_persist(
         toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     )
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))

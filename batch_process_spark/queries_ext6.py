@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from batch_process_spark.operators.caching import memoized_persist
 from batch_process_spark.queries import _q, _t, round_half_up
 from batch_process_spark.queries_ext4 import _duck_bucket, _hash_bucket
 
@@ -133,30 +134,6 @@ def q101_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from batch_process_spark.queries_ext5 import _DUCK_BIGRAMS as _DUCK_BI
 
-# Plan-keyed memo of persisted gram tables (q102): grams feed both the
-# g2 count build and the scoring join — without a persist the corpus is
-# tokenized+exploded twice per action. Same PersistMemo machinery as
-# the dedup shingle memo / q96 tf memo; released by
-# queries.invalidate_tables after mid-session file rewrites.
-from batch_process_spark.operators.caching import PersistMemo
-
-_GRAM_MEMO = PersistMemo(max_entries=2)
-
-
-def release_gram_caches() -> None:
-    """Unpersist and drop every memoized gram frame. Called by
-    invalidate_tables after mid-session file rewrites."""
-    _GRAM_MEMO.release_all()
-
-
-def _memoized_grams(df: DataFrame) -> DataFrame:
-    key = PersistMemo.plan_key(df)
-    hit = _GRAM_MEMO.get(key, df.sparkSession)
-    if hit is not None:
-        return hit
-    return _GRAM_MEMO.put(key, df.sparkSession, df)
-
-
 _NLL_THRESHOLD = 3.4  # splits every testdata SF ~70/30, pinned by pytest
 
 
@@ -227,7 +204,9 @@ def q102_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = distinct_tokens_frame(docs, "text").agg(
         F.countDistinct("t").alias("vocab")
     )
-    grams = _memoized_grams(ngram_frame(docs, ["doc_id", "source"], "text", 2))
+    # grams feed both the g2 count build and the scoring join: without a
+    # persist the corpus is tokenized+exploded twice per action
+    grams = memoized_persist(ngram_frame(docs, ["doc_id", "source"], "text", 2))
     g2 = grams.groupBy("g").agg(F.count(F.lit(1)).alias("c2"))
     w1 = F.split(F.col("g"), " ").getItem(0)
     g1 = g2.select(w1.alias("w1"), "c2").groupBy("w1").agg(

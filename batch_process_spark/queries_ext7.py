@@ -63,17 +63,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
-from batch_process_spark.operators.caching import PersistMemo
+from batch_process_spark.operators.caching import memoized_persist
 from batch_process_spark.queries import _q, _t
-
-# q118's deviation frame is read by two downstream passes (MAD
-# percentile + the final aggregate); persisting it saves a full
-# events re-scan per pass. Released by queries.invalidate_tables.
-_DEV_MEMO = PersistMemo(max_entries=2)
-
-
-def release_dev_caches() -> None:
-    _DEV_MEMO.release_all()
 
 # ---------------------------------------------------------------------------
 # q110 — equi-width histogram
@@ -783,9 +774,7 @@ def q118_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.join(F.broadcast(med), "event_type").select(
         "event_type", "med", F.abs(F.col("value") - F.col("med")).alias("dev")
     )
-    key = PersistMemo.plan_key(d)
-    cached = _DEV_MEMO.get(key, spark)
-    d = cached if cached is not None else _DEV_MEMO.put(key, spark, d)
+    d = memoized_persist(d)
     mad = d.groupBy("event_type").agg(
         (F.floor(F.expr("percentile(dev, 0.5)") * 10000 + F.lit(0.5)) / 10000)
         .alias("mad")

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
-from batch_process_spark.operators.caching import PersistMemo
+from batch_process_spark.operators.caching import memoized_persist, staged_slices
 from batch_process_spark.operators.sketches import (
     bloom_bit_positions,
     bloom_probe,
@@ -35,37 +35,6 @@ from batch_process_spark.operators.sketches import (
     hll_register_table,
 )
 from batch_process_spark.queries import _q, _t
-
-# Plan-keyed memo of persisted sketch-input frames — q128's bigram
-# counts, q136's unpivoted profile rows, q137/q155's daily rollup,
-# q139/q149's edge builds, and q151's per-superstep frontiers (six
-# puts in one build) each feed several aggregate branches; without a
-# persist each branch re-scans the corpus. Bounded (vocab-/table-/
-# edge-sized) and released by invalidate_tables after mid-session
-# file rewrites. max_entries must at least fit q151's six single-build
-# entries plus the reusable rollups without evicting them mid-round.
-_SKETCH_MEMO = PersistMemo(max_entries=12)
-
-
-def release_sketch_caches() -> None:
-    """Unpersist and drop the memoized sketch-input frames AND the
-    staged micro-batch slice dirs (q131/q134) — a slice dir snapshots
-    the events table, so after a mid-session rewrite it would feed the
-    stream stale rows. Called by invalidate_tables."""
-    import shutil
-
-    _SKETCH_MEMO.release_all()
-    for d in _Q131_DIRS.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _Q131_DIRS.clear()
-
-
-def _memoized_persist(df: DataFrame) -> DataFrame:
-    key = PersistMemo.plan_key(df)
-    hit = _SKETCH_MEMO.get(key, df.sparkSession)
-    if hit is not None:
-        return hit
-    return _SKETCH_MEMO.put(key, df.sparkSession, df)
 
 
 # ---------------------------------------------------------------------------
@@ -284,7 +253,7 @@ def q128_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.operators.text import ngrams_col
 
     docs = _t(spark, sf_dir, "documents")
-    counts = _memoized_persist(
+    counts = memoized_persist(
         docs.select(F.explode(ngrams_col("text", 2)).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -399,37 +368,11 @@ def q129_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q131: streaming HLL — registers maintained across real micro-batches
 # ---------------------------------------------------------------------------
 
-_Q131_DIRS: dict[tuple[str, str], str] = {}  # staged slice dirs, per (sf_dir, tag)
-
-
-class _TagMemo:
-    """Adapter presenting one ``tag``'s slice of the flat
-    ``_Q131_DIRS`` dict through the (get / setitem) surface
-    ``queries_ext10._staged_slices`` expects, so release_sketch_caches
-    and the pytest invalidation probes keep their flat
-    (sf_dir, tag)-keyed view."""
-
-    def __init__(self, tag: str):
-        self._tag = tag
-
-    def get(self, key):
-        return _Q131_DIRS.get((key, self._tag))
-
-    def __setitem__(self, key, value) -> None:
-        _Q131_DIRS[(key, self._tag)] = value
-
-
 def _staged_event_slices(sf_dir: str, tag: str, n_slices: int = 3):
-    """Events-table micro-batch slices for the q131/q134 streams —
-    a thin wrapper over the ONE staging protocol
-    (``queries_ext10._staged_slices``: memo short-circuit, atexit
-    reclaim, contiguous cuts, no-op feeds when fully staged), so the
-    two copies of that contract cannot drift; only the build_table (a
-    straight events.parquet read) and the (sf_dir, tag) memo keying
-    live here. Staleness after a mid-session events rewrite is
-    handled by release_sketch_caches, which invalidate_tables calls.
-    Returns (dir, write_slice) with slice 0 already written."""
-    from batch_process_spark.queries_ext10 import _staged_slices
+    """Events-table micro-batch slices for the q131/q134/q144/q150/q196
+    streams, staged by ``caching.staged_slices`` under the prefix
+    ``f"{tag}_slices_"``. Returns (dir, write_slice) with slice 0
+    already written."""
 
     def _events_table(sf_dir_: str):
         import os
@@ -438,9 +381,7 @@ def _staged_event_slices(sf_dir: str, tag: str, n_slices: int = 3):
 
         return pq.read_table(os.path.join(sf_dir_, "events.parquet"))
 
-    return _staged_slices(
-        _TagMemo(tag), sf_dir, f"{tag}_slices_", _events_table, n_slices
-    )
+    return staged_slices(sf_dir, f"{tag}_slices_", _events_table, n_slices)
 
 
 @_q(
@@ -965,7 +906,7 @@ def profile_frame(unpivoted: DataFrame) -> DataFrame:
     column (exactly the data-quality case a profile exists to flag)
     keeps its stats row with distinct counts of 0 instead of silently
     vanishing through an inner join."""
-    u = _memoized_persist(unpivoted)
+    u = memoized_persist(unpivoted)
     stats = u.groupBy("scope").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("key").isNull().cast("long")).alias("n_nulls"),

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
+from batch_process_spark.operators.caching import memoized_persist
 from batch_process_spark.queries import _q, _t
 
 #: q153's memoized (impressions, clicks) feed-dir pair — see the wipe
@@ -37,11 +38,9 @@ def _daily_spine(spark: SparkSession, sf_dir: str):
     its min/max (sequence-generated, never scanned). Any change to the
     user cut, the quantization, or the spine bounds reaches BOTH
     queries — they are documented as twins and must not drift."""
-    from batch_process_spark.queries_ext8 import _memoized_persist
-
     ev = _t(spark, sf_dir, "events")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = _memoized_persist(
+    daily = memoized_persist(
         ev.filter(F.col("user_id") < 30)
         .groupBy("user_id", F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(F.sum(cents).alias("cents"))
@@ -269,8 +268,6 @@ def q139_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.floor(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
     ).cast("long")
-    from batch_process_spark.queries_ext8 import _memoized_persist
-
     raw = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(joins.gated_broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -282,7 +279,7 @@ def q139_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persisted: the 3 unrolled iterations each reference the edge
     # frame — without it the 5-way star join re-executes per iteration
-    edges = _memoized_persist(
+    edges = memoized_persist(
         raw.withColumn("out_w", F.sum("w").over(Window.partitionBy("src")))
     )
 
@@ -372,13 +369,13 @@ def q140_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE transitive closure over the INDEPENDENT brute-force pair
     formulation."""
     from batch_process_spark.operators.graph import connected_components
-    from batch_process_spark.queries_ext8 import _memoized_persist, blocked_fuzzy_pairs
+    from batch_process_spark.queries_ext8 import blocked_fuzzy_pairs
 
     parts = _t(spark, sf_dir, "part")
     cents = F.floor(F.col("p_retailprice") * 100 + F.lit(0.5)).cast("long")
     # persisted: the dictionary feeds the pair probe, the pair build,
     # and the final re-key join — one part scan, three readers
-    names = _memoized_persist(
+    names = memoized_persist(
         parts.groupBy("p_name").agg(
             F.count(F.lit(1)).alias("n_parts"), F.sum(cents).alias("cents")
         )
@@ -920,11 +917,9 @@ def q149_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     from batch_process_spark.operators.graph import copurchase_edges, triangles_per_node
-    from batch_process_spark.queries_ext8 import _memoized_persist
-
     # persisted via the bounded memo pool (released by invalidate_tables):
     # the edge set feeds the wedge join twice and the closure probe
-    edges = _memoized_persist(copurchase_edges(li, "l_orderkey", "l_partkey"))
+    edges = memoized_persist(copurchase_edges(li, "l_orderkey", "l_partkey"))
     tcnt = triangles_per_node(edges, count_col="n_triangles")
     return (
         tcnt.select(F.col("node").alias("l_partkey"), "n_triangles")
@@ -1049,20 +1044,18 @@ def q151_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the same walk as a recursive CTE (UNION-dedup)
     reduced by min(d)."""
     from batch_process_spark.operators.graph import copurchase_edges
-    from batch_process_spark.queries_ext8 import _memoized_persist
-
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 2000)
     # the canonical (u < v) basket edge set, shared with q149/q166/q169
     # so the cap/canonicalization cannot drift — BFS walks an
     # undirected graph, so symmetrize it (each pair in both directions)
     canon = copurchase_edges(li, "l_orderkey", "l_partkey")
-    edges = _memoized_persist(
+    edges = memoized_persist(
         canon.unionByName(
             canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
     )
     seed = edges.agg(F.min("u").alias("node"))
-    visited = _memoized_persist(seed.withColumn("hops", F.lit(0).cast("long")))
+    visited = memoized_persist(seed.withColumn("hops", F.lit(0).cast("long")))
     rounds = [visited]
     frontier = visited
     for d in range(1, 5):
@@ -1072,7 +1065,7 @@ def q151_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("v").alias("node"))
             .distinct()
         )
-        new = _memoized_persist(
+        new = memoized_persist(
             nbrs.join(visited.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(d).cast("long"))
         )
@@ -1728,9 +1721,7 @@ def q160_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     back onto the pair rollup; top-20 is TakeOrderedAndProject.
     Metrics are single divisions of exact integers, rounded at 6 in
     both engines."""
-    from batch_process_spark.queries_ext8 import _memoized_persist
-
-    b = _memoized_persist(
+    b = memoized_persist(
         _t(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") <= 2000)
         .select("l_orderkey", "l_partkey")

@@ -327,13 +327,13 @@ def main():
             distinct_tokens_frame,
             ngram_frame,
         )
-        from batch_process_spark.queries_ext6 import _memoized_grams
+        from batch_process_spark.operators.caching import memoized_persist
 
         def bigram_lm():
             vocab = distinct_tokens_frame(docs, "text").agg(
                 F.countDistinct("t").alias("vocab")
             )
-            grams = _memoized_grams(ngram_frame(docs, ["doc_id"], "text", 2))
+            grams = memoized_persist(ngram_frame(docs, ["doc_id"], "text", 2))
             g2 = grams.groupBy("g").agg(F.count(F.lit(1)).alias("c2"))
             w1 = F.split(F.col("g"), " ").getItem(0)
             g1 = g2.select(w1.alias("w1"), "c2").groupBy("w1").agg(
@@ -372,12 +372,12 @@ def main():
             FROM scored GROUP BY 1""",
         )
         print(f"| bigram_lm | {n} | {n_rows} | {t1:.2f} | {t2:.2f} | {d:.2f} | {min(t1, t2)/d:.1f}x | {fmt_shuffle(sb, n_rows)} |")
-        # release the gram memo with the input it derives from — the
+        # release the memo with the input it derives from — the
         # persisted gram frames are corpus-sized and must not squat in
         # executor storage while later sections are being timed
-        from batch_process_spark.queries_ext6 import release_gram_caches
+        from batch_process_spark.operators.caching import release_all
 
-        release_gram_caches()
+        release_all()
         docs.unpersist()
 
         # embedding top-k

@@ -557,13 +557,13 @@ def test_span_family_kernel_runs_once_via_memo(spark, qs):
     h-partitioned occurrence frame multiple times (a frame joined to
     its own aggregates is never subtree-reused by Catalyst — the r10
     ReusedExchange lesson), so queries_ext15._span_occ persists it via
-    PersistMemo. Each plan must run the Arrow span kernel EXACTLY ONCE
-    (one MapInPandas, inside the shared InMemoryRelation) with every
-    other branch reading the cache — q247 previously ran the kernel
+    caching.memoized_persist. Each plan must run the Arrow span kernel
+    EXACTLY ONCE (one MapInPandas, inside the shared InMemoryRelation)
+    with every other branch reading the cache — q247 previously ran the kernel
     FIVE times (57.8 -> ~20 s at 1M docs), q240/q242 twice."""
-    from batch_process_spark.queries_ext15 import release_span_caches
+    from batch_process_spark.operators.caching import release_all
 
-    release_span_caches()  # deterministic start: first branch persists
+    release_all()  # deterministic start: first branch persists
     try:
         for q in ("q240_span_novelty_curve", "q242_dup_by_length",
                   "q247_span_containment", "q219_span_attribution"):
@@ -574,7 +574,7 @@ def test_span_family_kernel_runs_once_via_memo(spark, qs):
             assert tree.count("InMemoryTableScan") >= 2, f"{q}: no cache reads"
             assert "CartesianProduct" not in plan
     finally:
-        release_span_caches()
+        release_all()
 
 
 def test_q209_drift_partial_aggs(spark, qs):

@@ -543,6 +543,7 @@ def test_span_occ_exchange_self_sizing(spark, monkeypatch):
     from pyspark import StorageLevel
 
     from batch_process_spark import queries_ext15 as q15
+    from batch_process_spark.operators import caching
 
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{i}x{j}" for j in range(20))) for i in range(100)],
@@ -567,9 +568,9 @@ def test_span_occ_exchange_self_sizing(spark, monkeypatch):
     assert q15._span_occ_partitions(docs.filter("doc_id < 0")) is None
 
     # storage level: the memo is persisted serialized
-    q15.release_span_caches()
+    caching.release_all()
     assert q15._span_occ(docs).storageLevel == StorageLevel.MEMORY_AND_DISK
-    q15.release_span_caches()
+    caching.release_all()
 
 
 def test_span_width_estimator_debiased(spark, tmp_path):
@@ -624,8 +625,9 @@ def test_span_width_estimator_debiased(spark, tmp_path):
 def test_span_scale_parts_memoized_and_released(spark, monkeypatch, tmp_path):
     """Round-13: the sizing estimate is memoized next to the occurrence
     memo (one set of sizing jobs per corpus per session) and dropped by
-    release_span_caches."""
+    caching.release_all."""
     from batch_process_spark import queries_ext15 as q15
+    from batch_process_spark.operators import caching
 
     df = spark.createDataFrame(
         [(i, " ".join(f"w{i}x{j}" for j in range(20))) for i in range(100)],
@@ -635,20 +637,20 @@ def test_span_scale_parts_memoized_and_released(spark, monkeypatch, tmp_path):
     df.write.parquet(d)
     docs = spark.read.parquet(d)
 
-    q15.release_span_caches()
+    caching.release_all()
     monkeypatch.setattr(q15, "_SPAN_SIZE_GATE_ROWS", 1000)
     monkeypatch.setattr(q15, "_SPAN_TARGET_ROWS_PER_PART", 10)
     n = q15._span_scale_parts(docs)
     assert n == q15._span_occ_partitions(docs) == 130
-    assert n in q15._SPAN_PARTS.values()
+    assert n in caching.SPAN_PARTS.values()
     # memo hit: monkeypatch the underlying estimator to prove no recompute
     monkeypatch.setattr(
         q15, "_span_occ_partitions",
         lambda *_: (_ for _ in ()).throw(AssertionError("sizing re-ran")),
     )
     assert q15._span_scale_parts(docs) == 130
-    q15.release_span_caches()
-    assert not q15._SPAN_PARTS
+    caching.release_all()
+    assert not caching.SPAN_PARTS
 
 
 def test_span_occ_eager_materialization_above_gate(spark, monkeypatch, tmp_path):
@@ -660,6 +662,7 @@ def test_span_occ_eager_materialization_above_gate(spark, monkeypatch, tmp_path)
     (no extra job) and the cold distinct still pays the exchange —
     both sides asserted so the gate boundary is pinned."""
     from batch_process_spark import queries_ext15 as q15
+    from batch_process_spark.operators import caching
 
     df = spark.createDataFrame(
         [(i, " ".join(f"w{i}x{j}" for j in range(20))) for i in range(100)],
@@ -678,19 +681,19 @@ def test_span_occ_eager_materialization_above_gate(spark, monkeypatch, tmp_path)
         return plan.split("InMemoryTableScan")[0]
 
     # below the gate: lazy memo -> the first distinct plan re-shuffles
-    q15.release_span_caches()
+    caching.release_all()
     occ_lazy = q15._span_occ(docs)
     lazy_head = above_cache(occ_lazy.distinct())
     assert "Exchange" in lazy_head  # unmaterialized cache hides partitioning
 
     # above the (monkeypatched) gate: eager count -> first plan is clean
-    q15.release_span_caches()
+    caching.release_all()
     monkeypatch.setattr(q15, "_SPAN_SIZE_GATE_ROWS", 1000)
     monkeypatch.setattr(q15, "_SPAN_TARGET_ROWS_PER_PART", 10)
     occ_eager = q15._span_occ(docs)
     eager_head = above_cache(occ_eager.distinct())
     assert "Exchange" not in eager_head, eager_head
-    q15.release_span_caches()
+    caching.release_all()
 
 
 def test_span_family_gated_sizing_preserves_results(spark, monkeypatch, tmp_path):
@@ -701,6 +704,7 @@ def test_span_family_gated_sizing_preserves_results(spark, monkeypatch, tmp_path
     Results must be IDENTICAL to the below-gate (session default)
     plans, and the sized q219 plan must carry the doc_a exchange."""
     from batch_process_spark import queries_ext15 as q15
+    from batch_process_spark.operators import caching
     from batch_process_spark import queries_ext17 as q17
 
     # overlapping docs so every query has non-trivial output: 5 groups
@@ -729,14 +733,14 @@ def test_span_family_gated_sizing_preserves_results(spark, monkeypatch, tmp_path
 
     qs = entry.queries()
 
-    q15.release_span_caches()
+    caching.release_all()
     baseline = {n: sorted(map(tuple, qs[n](spark, d).collect())) for n in names}
     assert any(baseline.values())
 
     # flip the gate so the 45-doc corpus sizes itself
     monkeypatch.setattr(q15, "_SPAN_SIZE_GATE_ROWS", 10)
     monkeypatch.setattr(q15, "_SPAN_TARGET_ROWS_PER_PART", 100)
-    q15.release_span_caches()
+    caching.release_all()
     sized = {n: sorted(map(tuple, qs[n](spark, d).collect())) for n in names}
     assert sized == baseline
 
@@ -747,4 +751,4 @@ def test_span_family_gated_sizing_preserves_results(spark, monkeypatch, tmp_path
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert f"hashpartitioning(doc_a#" in plan or "hashpartitioning(doc_a" in plan
-    q15.release_span_caches()
+    caching.release_all()

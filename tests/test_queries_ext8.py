@@ -260,14 +260,15 @@ def test_q134_state_carries_across_batches(spark):
     import os
 
     from batch_process_spark.queries_ext3 import _events_stream_schema
-    from batch_process_spark.queries_ext8 import _Q131_DIRS, _staged_event_slices
+    from batch_process_spark.operators.caching import _STAGED_DIRS
+    from batch_process_spark.queries_ext8 import _staged_event_slices
     from batch_process_spark.streaming.stateful import running_totals_cents_stream
     from batch_process_spark.streaming.windows import run_stream_to_memory
 
     import shutil
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stale = _Q131_DIRS.pop((os.path.abspath(SF), "t134_fresh"), None)
+    stale = _STAGED_DIRS.pop((os.path.abspath(SF), "t134_fresh_slices_"), None)
     if stale:  # don't orphan the previous run's staged copy in /tmp
         shutil.rmtree(stale, ignore_errors=True)
     d, ws = _staged_event_slices(SF, "t134_fresh")
@@ -376,24 +377,19 @@ def test_q130_matches_bruteforce_editdistance(spark):
     assert any(d > 0 for d in got.values()), "only exact dupes — distance path unexercised"
 
 
-def test_release_sketch_caches_clears_staged_dirs(spark):
+def test_release_all_clears_staged_event_dirs(spark):
     """invalidate_tables must not leave stale micro-batch slice dirs
     behind: a slice dir snapshots the events table, so after a
-    mid-session rewrite the stream would replay old rows. (Runs last
-    in this module: completed streaming results live in memory sinks,
-    so removing staged dirs never invalidates earlier results.)"""
+    mid-session rewrite the stream would replay old rows."""
     import os
 
-    from batch_process_spark.queries_ext8 import (
-        _Q131_DIRS,
-        _staged_event_slices,
-        release_sketch_caches,
-    )
+    from batch_process_spark.operators.caching import _STAGED_DIRS, release_all
+    from batch_process_spark.queries_ext8 import _staged_event_slices
 
     d, _ = _staged_event_slices(SF, "t_release_probe")
     assert os.path.isdir(d)
-    release_sketch_caches()
-    assert not _Q131_DIRS, "staged-dir memo survived release"
+    release_all()
+    assert not _STAGED_DIRS, "staged-dir memo survived release"
     assert not os.path.isdir(d), "staged dir left on disk after release"
 
 
