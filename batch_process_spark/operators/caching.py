@@ -10,6 +10,9 @@ one call, ``release_all()``, which ``queries.invalidate_tables`` makes:
   (dedup shingles, q96 tf, q102 grams, q118 deviations, the sketch
   inputs, graph edges, PQ codes, the span occurrence frame) persists
   through it, under one entry budget, ``MEMO_ENTRIES``.
+- ``pinned_for_result``: a bounded pool of frames persisted for a lazy
+  result that reads them after its builder returned (the global-ranks
+  frame, ``operators.ranking``), released oldest first.
 - ``SPAN_PARTS``: the span family's partition estimate, keyed like the
   span occurrence entry it sizes.
 - ``staged_slices``: parquet slices of a table, written to a temp dir
@@ -31,7 +34,7 @@ import os
 import shutil
 import tempfile
 import weakref
-from collections import OrderedDict
+from collections import OrderedDict, deque
 
 from pyspark.sql import DataFrame
 
@@ -40,6 +43,13 @@ from pyspark.sql import DataFrame
 # (its per-superstep frontiers), and they must not be evicted before
 # the action runs.
 MEMO_ENTRIES = 24
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session already stopped; nothing to release
 
 
 class PersistMemo:
@@ -71,10 +81,7 @@ class PersistMemo:
             self._entries.move_to_end(key)
             return cached
         if target is not None:  # other LIVE session: release its frame
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
+            _unpersist(cached)
         del self._entries[key]
         return None
 
@@ -86,20 +93,14 @@ class PersistMemo:
         self._entries[key] = (weakref.ref(session), df)
         while len(self._entries) > self._max:
             _, (_, old) = self._entries.popitem(last=False)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            _unpersist(old)
         return df
 
     def release_all(self) -> None:
         """Unpersist and drop every entry (file-rewrite invalidation)."""
         while self._entries:
             _, (_, cached) = self._entries.popitem()
-            try:
-                cached.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to release
+            _unpersist(cached)
 
 
 _MEMO = PersistMemo(max_entries=MEMO_ENTRIES)
@@ -118,6 +119,23 @@ def memoized_persist(key_df: DataFrame, *extra, build=None,
         return hit
     df = build() if build is not None else key_df
     return _MEMO.put(key, session, df, storage_level)
+
+
+# The ranked frame must stay cached until the caller's action consumes
+# the lazy result, so global_ranks cannot unpersist it itself; the
+# oldest beyond this bound are released.
+RESULT_PINS = 4
+_PINNED: deque[DataFrame] = deque()
+
+
+def pinned_for_result(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for a lazy result built on it; it stays until
+    ``RESULT_PINS`` newer pins or ``release_all`` release it."""
+    df = df.persist()
+    _PINNED.append(df)
+    while len(_PINNED) > RESULT_PINS:
+        _unpersist(_PINNED.popleft())
+    return df
 
 
 # span occurrence plan key -> partition count (None: session default)
@@ -168,6 +186,8 @@ def release_all() -> None:
     a path, so any table rewrite releases them all: over-broad, never
     stale."""
     _MEMO.release_all()
+    while _PINNED:
+        _unpersist(_PINNED.popleft())
     SPAN_PARTS.clear()
     for d in _STAGED_DIRS.values():
         shutil.rmtree(d, ignore_errors=True)

@@ -32,15 +32,9 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_PID, _RN, _RK, _DR, _CE = "__gr_pid", "__gr_rn", "__gr_rk", "__gr_dr", "__gr_ce"
+from batch_process_spark.operators.caching import pinned_for_result
 
-# Bounded pool of live persisted intermediates (the ranked frame must
-# stay cached until the caller's action consumes the lazy result, so it
-# cannot be unpersisted inside global_ranks). Oldest entries beyond the
-# bound are released; the handle also rides on the result as
-# ``_bps_persisted`` for eager caller-managed release.
-_LIVE_RANK_CACHES: list[DataFrame] = []
-_LIVE_RANK_CACHES_MAX = 4
+_PID, _RN, _RK, _DR, _CE = "__gr_pid", "__gr_rn", "__gr_rk", "__gr_dr", "__gr_ce"
 
 
 def global_ranks(
@@ -121,13 +115,7 @@ def global_ranks(
         pdf[_CE] = run_end
         yield pdf
 
-    ranked = rp.mapInPandas(kernel, schema=out_schema).persist()
-    _LIVE_RANK_CACHES.append(ranked)
-    while len(_LIVE_RANK_CACHES) > _LIVE_RANK_CACHES_MAX:
-        try:
-            _LIVE_RANK_CACHES.pop(0).unpersist()
-        except Exception:
-            pass  # session already stopped; nothing to release
+    ranked = pinned_for_result(rp.mapInPandas(kernel, schema=out_schema))
     stats = (
         ranked.groupBy(_PID)
         .agg(F.max(_RN).alias("n"), F.max(_DR).alias("d"))

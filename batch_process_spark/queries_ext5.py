@@ -567,36 +567,37 @@ def q99_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applies for the batch queries under a vanilla driver session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = "user_id int, ts timestamp, value double"
-    d = tempfile.mkdtemp(prefix="q99_wm_")
+    # the feed dir is gone once the stream stops: the result is the
+    # memory-sink table, which does not read it
+    with tempfile.TemporaryDirectory(prefix="q99_wm_") as d:
+        from batch_process_spark.streaming.feed import append_feed
 
-    from batch_process_spark.streaming.feed import append_feed
+        def write(rows):
+            append_feed(d, schema, rows)
 
-    def write(rows):
-        append_feed(d, schema, rows)
+        from datetime import datetime
 
-    from datetime import datetime
+        def t(h, m):
+            return datetime(2024, 1, 1, h, m)
 
-    def t(h, m):
-        return datetime(2024, 1, 1, h, m)
-
-    write([(1, t(10, 1), 1.0), (1, t(10, 2), 2.0), (1, t(10, 20), 4.0)])
-    feeds = [
-        lambda: write([(1, t(10, 2), 100.0), (1, t(10, 30), 8.0)]),
-        lambda: write([(1, t(10, 50), 16.0)]),
-        lambda: write([(1, t(11, 30), 32.0)]),
-    ]
-    out = run_stream_to_memory(
-        spark,
-        d,
-        schema,
-        lambda s: tumbling_window_agg(s, width="10 minutes", watermark="5 minutes"),
-        query_name="q99_out",
-        output_mode="append",
-        feeds=feeds,
-        scoped_conf={
-            "spark.sql.streaming.noDataMicroBatches.enabled": "true",
-        },
-    )
+        write([(1, t(10, 1), 1.0), (1, t(10, 2), 2.0), (1, t(10, 20), 4.0)])
+        feeds = [
+            lambda: write([(1, t(10, 2), 100.0), (1, t(10, 30), 8.0)]),
+            lambda: write([(1, t(10, 50), 16.0)]),
+            lambda: write([(1, t(11, 30), 32.0)]),
+        ]
+        out = run_stream_to_memory(
+            spark,
+            d,
+            schema,
+            lambda s: tumbling_window_agg(s, width="10 minutes", watermark="5 minutes"),
+            query_name="q99_out",
+            output_mode="append",
+            feeds=feeds,
+            scoped_conf={
+                "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+            },
+        )
     return out.select("bucket_start", "n_events", "sum_value")
 
 
@@ -656,39 +657,39 @@ def q100_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     si = "ad_id int, imp_ts timestamp"
     sc = "ad_id int, click_ts timestamp, click_value double"
-    di = tempfile.mkdtemp(prefix="q100_imp_")
-    dc = tempfile.mkdtemp(prefix="q100_clk_")
+    # both feed dirs go once the stream stops (see q99)
+    with tempfile.TemporaryDirectory(prefix="q100_imp_") as di, \
+            tempfile.TemporaryDirectory(prefix="q100_clk_") as dc:
+        from batch_process_spark.streaming.feed import append_feed
 
-    from batch_process_spark.streaming.feed import append_feed
+        def wi(rows):
+            append_feed(di, si, rows)
 
-    def wi(rows):
-        append_feed(di, si, rows)
+        def wc(rows):
+            append_feed(dc, sc, rows)
 
-    def wc(rows):
-        append_feed(dc, sc, rows)
+        def t(h, m):
+            return datetime(2024, 1, 1, h, m)
 
-    def t(h, m):
-        return datetime(2024, 1, 1, h, m)
-
-    wi([(1, t(10, 0)), (2, t(10, 5))])
-    wc([(1, t(10, 4), 1.0)])
-    feeds = [
-        # advances BOTH watermarks: imp 11:00, clicks 11:05 -> global 10:50
-        lambda: (wi([(3, t(11, 0))]),
-                 wc([(2, t(10, 9), 2.0), (2, t(10, 30), 3.0), (3, t(11, 5), 4.0)])),
-        # behind 10:50 -> dropped at input
-        lambda: wc([(1, t(10, 6), 100.0)]),
-    ]
-    out = run_two_streams_to_memory(
-        spark, di, si, dc, sc,
-        lambda l, r: stream_interval_join(
-            l, r, on="ad_id", left_ts="imp_ts", right_ts="click_ts",
-            max_delay="10 minutes", watermark="10 minutes",
-        ).select("l.ad_id", "imp_ts", "click_ts", "click_value"),
-        query_name="q100_out",
-        feeds=feeds,
-        scoped_conf={
-            "spark.sql.streaming.noDataMicroBatches.enabled": "true",
-        },
-    )
+        wi([(1, t(10, 0)), (2, t(10, 5))])
+        wc([(1, t(10, 4), 1.0)])
+        feeds = [
+            # advances BOTH watermarks: imp 11:00, clicks 11:05 -> global 10:50
+            lambda: (wi([(3, t(11, 0))]),
+                     wc([(2, t(10, 9), 2.0), (2, t(10, 30), 3.0), (3, t(11, 5), 4.0)])),
+            # behind 10:50 -> dropped at input
+            lambda: wc([(1, t(10, 6), 100.0)]),
+        ]
+        out = run_two_streams_to_memory(
+            spark, di, si, dc, sc,
+            lambda l, r: stream_interval_join(
+                l, r, on="ad_id", left_ts="imp_ts", right_ts="click_ts",
+                max_delay="10 minutes", watermark="10 minutes",
+            ).select("l.ad_id", "imp_ts", "click_ts", "click_value"),
+            query_name="q100_out",
+            feeds=feeds,
+            scoped_conf={
+                "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+            },
+        )
     return out

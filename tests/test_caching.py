@@ -94,15 +94,27 @@ def test_invalidate_tables_releases_every_cache(spark, tmp_path):
     assert not os.path.isdir(d)
 
 
+def test_invalidate_tables_releases_the_ranking_pins(spark):
+    """global_ranks (q84/q89/q120) pins its ranked frame past the build;
+    the one release unpersists it with the memo entries."""
+    from batch_process_spark.operators.ranking import global_ranks
+    from batch_process_spark.queries import invalidate_tables
+
+    caching.release_all()
+    before = _persistent_rdd_ids(spark)
+    global_ranks(spark.range(200).selectExpr("id % 7 AS v"), ["v"]).collect()
+    assert caching._PINNED and _persistent_rdd_ids(spark) - before, "nothing pinned"
+    invalidate_tables()
+    assert not caching._PINNED
+    assert _persistent_rdd_ids(spark) <= before
+
+
 # --- structure guard -------------------------------------------------------
 
 # mkdtemp prefixes allowed outside caching.py: none of these dirs holds
 # a table snapshot. ``stream_`` holds a symlink to the table file
-# (queries_ext3); the q99/q100 feeds are literal rows written per call;
-# q153's feed pair is wiped on every call.
-_NON_SNAPSHOT_PREFIXES = {
-    "stream_", "q99_wm_", "q100_imp_", "q100_clk_", "q153_imp_", "q153_clk_",
-}
+# (queries_ext3); q153's feed pair is wiped on every call.
+_NON_SNAPSHOT_PREFIXES = {"stream_", "q153_imp_", "q153_clk_"}
 
 
 def _modules():

@@ -803,3 +803,43 @@ def test_bench_queries_invariant_to_partitioning_and_aqe(spark, qs):
     for conf, got in zip(settings[1:], results[1:]):
         differ = [n for n in bench.BENCH_QUERIES if got[n] != results[0][n]]
         assert not differ, f"{conf} changed the results of {differ}"
+
+
+# Spark jobs that each bench query's plan build starts, from an empty
+# table memo (``invalidate_tables`` first, so no count depends on query
+# order). Plan build may run only bounded metadata jobs: today one
+# schema-inference job per ``_t()`` table read, plus the driver-side
+# sizing of q25 and the span family. A ``_t()`` that reads the schema
+# without a job shows here as lower counts.
+BUILD_JOBS = {
+    "q01_pricing_summary": 1, "q02_filter_multi": 1, "q04_union_align": 1,
+    "q05_group_split_nullkeys": 1, "q06_label_enrich_join": 3, "q07_result_merge": 1,
+    "q16_report_roundtrip": 1, "q17_dedup_exact": 1, "q18_minhash_lsh_neardup": 1,
+    "q21_token_stats": 1, "q25_embedding_topk": 2, "q29_shipping_priority": 6,
+    "q30_local_supplier_volume": 8, "q31_revenue_forecast": 1,
+    "q207_sliding_span_dedup": 5, "q219_span_attribution": 5,
+    "q222_quality_dup_calibration": 5, "q224_ingest_dedup_delta": 1,
+}
+
+
+def test_bench_query_build_jobs_are_pinned(spark, qs):
+    import bench
+
+    from batch_process_spark.queries import invalidate_tables
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def last_job_id() -> int:
+        jobs = store.jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    got = {}
+    try:
+        for name in bench.BENCH_QUERIES:
+            invalidate_tables()
+            mark = last_job_id()
+            qs[name](spark, SF)
+            got[name] = last_job_id() - mark
+    finally:
+        invalidate_tables()
+    assert got == BUILD_JOBS

@@ -167,3 +167,19 @@ def test_q100_scoped_confs_restored(spark):
     QUERIES["q100_stream_stream_join"](spark, "/root/testdata/sf0.001").collect()
     assert spark.conf.get("spark.sql.shuffle.partitions") == before_sp
     assert spark.conf.get(key, None) in (None, "true")  # default, not pinned
+
+
+def test_stream_feed_dirs_removed_after_the_stream_stops(spark):
+    """q99 and q100 return their memory-sink table, which does not read
+    the feeds: their temp dirs are gone once the queries return."""
+    import os
+    import tempfile
+
+    def feed_dirs():
+        return {e for e in os.listdir(tempfile.gettempdir())
+                if e.startswith(("q99_wm_", "q100_"))}
+
+    before = feed_dirs()
+    assert len(QUERIES["q99_stream_watermark"](spark, SF).collect()) > 0
+    assert len(QUERIES["q100_stream_stream_join"](spark, SF).collect()) == 3
+    assert feed_dirs() <= before
