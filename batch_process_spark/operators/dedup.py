@@ -151,32 +151,6 @@ def shingle_fingerprint(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """Array of ``num_hashes`` minhash values (int64).
-
-    Two passes, both map-only array expressions (no explode/shuffle):
-    (1) fingerprint every shingle once (the only md5); (2) a single
-    aggregate whose accumulator is the running per-permutation minimum,
-    merged via zip_with(least) over the cheap integer hash family.
-    Structured so no lambda captures an expensive outer expression —
-    interpreted higher-order functions re-evaluate captures per element.
-    """
-    a_arr = F.array(*[F.lit(a) for a in MINHASH_A[:num_hashes]])
-    b_arr = F.array(*[F.lit(b) for b in MINHASH_B[:num_hashes]])
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    xs = F.transform(shingles, shingle_fingerprint)
-    init = F.array_repeat(F.lit(MINHASH_P), num_hashes)
-
-    def merge(acc: Column, x: Column) -> Column:
-        hashes = F.transform(
-            seeds,
-            lambda j: (F.element_at(a_arr, j + 1) * x + F.element_at(b_arr, j + 1)) % MINHASH_P,
-        )
-        return F.zip_with(acc, hashes, lambda p, q: F.least(p, q))
-
-    return F.aggregate(xs, init, merge)
-
-
 def minhash_docs(
     df: DataFrame,
     id_col: str,
@@ -186,9 +160,9 @@ def minhash_docs(
 ) -> DataFrame:
     """(id, sig) per doc via explode + partial aggregation.
 
-    The array-expression form (``minhash_signature``) evaluates lambdas
-    in Spark's interpreted mode — fine for small rows, but the explode
-    form keeps everything inside whole-stage codegen: one row per
+    An array-expression form (a ``transform``/``aggregate`` over the
+    shingle array) evaluates lambdas in Spark's interpreted mode; the
+    explode form keeps everything inside whole-stage codegen: one row per
     shingle, one md5, ``num_hashes`` integer min-aggregates with
     map-side combine, so the shuffle carries only (id, 16 longs) per
     doc. This is the 100 TB-shaped plan.
@@ -306,8 +280,8 @@ def shingle_sig_frame(
     """(id, shingles, sig) in ONE Arrow pass — shingling as in
     ``shingle_frame`` plus the minhash signature computed vectorized
     (md5-fingerprint each shingle, then a numpy min over the same
-    (a*x+b) mod P family as the JVM forms — bit-exact with
-    ``minhash_signature``/``minhash_docs`` and the DuckDB oracle).
+    (a*x+b) mod P family as the JVM form — bit-exact with
+    ``minhash_docs`` and the DuckDB oracle).
 
     This is the zero-shuffle signature path: map-only end to end, so
     the LSH pipeline's only wide stage is the banded candidate join.
@@ -326,7 +300,7 @@ def shingle_sig_frame(
     pat = _re.compile(r"[^0-9a-zA-Z]+")
     A = np.array(MINHASH_A[:num_hashes], dtype=np.int64)
     B = np.array(MINHASH_B[:num_hashes], dtype=np.int64)
-    empty_sig = [int(MINHASH_P)] * num_hashes  # matches aggregate() init on []
+    empty_sig = [int(MINHASH_P)] * num_hashes  # min over no shingles: every slot at P
 
     def batches(it):
         for pdf in it:

@@ -21,7 +21,7 @@ shuffles" claim silently becomes 2^R joins of recomputed lineage.
 ``checkpoint=True`` cuts lineage per round via eager
 ``localCheckpoint``, making each round exactly one self-join of a
 MATERIALIZED table — the shape the 100 TB claim is about, measured in
-``scripts/opprobe.py`` (BASELINE §5j). Default False: at dimension
+BASELINE §5j. Default False: at dimension
 scale (the q164 catalog instance) the 2^4-leaf plan is cheaper than 4
 materialization jobs, and ``localCheckpoint`` pins executor memory/disk
 that small plans never earn back.

@@ -8,7 +8,6 @@ coalesce. We expose that pattern plus the standard surface.
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -16,14 +15,9 @@ from pyspark.sql import functions as F
 
 #: Default build-side size gate for ``gated_broadcast`` (bytes). 50 MB
 #: is ~5x Spark's own autoBroadcastJoinThreshold default — generous for
-#: a deliberate hint, still far below executor memory. Overridable via
-#: SPARK_GRAFT_BROADCAST_CAP_BYTES (tests force it low to exercise the
-#: shuffle fallback).
+#: a deliberate hint, still far below executor memory. Read at call
+#: time, so tests patch it low to exercise the shuffle fallback.
 BROADCAST_CAP_BYTES = 50 * 1024 * 1024
-
-
-def broadcast_cap_bytes() -> int:
-    return int(os.environ.get("SPARK_GRAFT_BROADCAST_CAP_BYTES", str(BROADCAST_CAP_BYTES)))
 
 
 def estimated_bytes(df: DataFrame) -> int | None:
@@ -53,7 +47,7 @@ def gated_broadcast(df: DataFrame, *gate_on: DataFrame, cap_bytes: int | None = 
     output is bounded by the fact-side row count. Callers pass the join
     inputs (sound proxy when each fact row matches at most one build
     row). Unknown stats (None) fail SAFE to the shuffle path."""
-    cap = broadcast_cap_bytes() if cap_bytes is None else cap_bytes
+    cap = BROADCAST_CAP_BYTES if cap_bytes is None else cap_bytes
     probes = gate_on if gate_on else (df,)
     total = 0
     for p in probes:
@@ -149,7 +143,7 @@ def inline_local(
     current contents into the plan; rebuild after table changes (the
     catalog's plan memo is dropped by ``queries.invalidate_tables``).
     """
-    cap = broadcast_cap_bytes() if cap_bytes is None else cap_bytes
+    cap = BROADCAST_CAP_BYTES if cap_bytes is None else cap_bytes
     probes = gate_on if gate_on else (df,)
     total = 0
     for p in probes:

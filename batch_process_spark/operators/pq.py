@@ -488,7 +488,7 @@ def _exact_rerank(
     codes frame it was selected from — past the auto-broadcast
     threshold the corpus join silently flips to a sort-merge that
     shuffles the float corpus (measured: 1.6 MB -> 525 MB per serving
-    batch between 262k and 1M vectors; servingprobe r13). The hint
+    batch between 262k and 1M vectors; BASELINE §5u). The hint
     pins the map-only corpus scan at any corpus size.
 
     ``cand_rows_bound`` (VERDICT r13 item 4): callers that know a hard
@@ -508,7 +508,7 @@ def _exact_rerank(
     cand_side = F.broadcast(cand)
     if (
         cand_rows_bound is not None
-        and cand_rows_bound * _CAND_ROW_BYTES > joins.broadcast_cap_bytes()
+        and cand_rows_bound * _CAND_ROW_BYTES > joins.BROADCAST_CAP_BYTES
     ):
         # degenerate regime: correctness over speed — shuffle both
         # sides on id and build the hash on the (still smaller) cand

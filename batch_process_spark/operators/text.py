@@ -168,16 +168,6 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.array_join(toks, " "))
 
 
-def rolling_fingerprint(text: Column | str, k: int = 5, keep: int = 4) -> Column:
-    """Winnowing-style fingerprint: the ``keep`` smallest md5 hashes of
-    the doc's k-gram shingles, joined. Local edits change few shingles,
-    so near-identical docs share most of the fingerprint."""
-    from batch_process_spark.operators.dedup import shingles_col
-
-    hashes = F.array_sort(F.transform(shingles_col(text, k), lambda s: F.md5(s)))
-    return F.array_join(F.slice(hashes, 1, keep), "|")
-
-
 def ngram_frame(
     df: DataFrame, id_cols: list[str], text_col: str = "text", n: int = 2
 ) -> DataFrame:

@@ -13,14 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def to_upper(col: Column | str) -> Column:
-    return F.upper(F.col(col) if isinstance(col, str) else col)
-
-
-def to_lower(col: Column | str) -> Column:
-    return F.lower(F.col(col) if isinstance(col, str) else col)
-
-
 def remove_blank_lines(col: Column | str) -> Column:
     """Drop empty/whitespace-only lines from a text blob."""
     c = F.col(col) if isinstance(col, str) else col

@@ -81,9 +81,12 @@ import weakref  # noqa: E402
 _SESSION_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read table ``name`` (memoized per session) with runtime-conf
-    pinning."""
+def _pin_session_confs(spark: SparkSession) -> dict:
+    """Pin, once per session, the runtime confs every catalog query
+    depends on, and return the session's memo. The confs stay set after
+    the query returns on purpose: a result's timestamps render in the
+    session time zone at the caller's later collect, so UTC must outlive
+    the call."""
     try:
         memo = _SESSION_MEMO.setdefault(spark, {})
     except TypeError:  # non-weakref-able session stand-in (test fakes)
@@ -104,6 +107,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # events/orders/lineitem timestamps from NANOS to MICROS.
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         memo["pinned"] = True
+    return memo
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read table ``name`` (memoized per session) with runtime-conf
+    pinning."""
+    memo = _pin_session_confs(spark)
     key = (sf_dir, name)
     if key not in memo:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -198,8 +208,8 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     # Order-independent money sums via integer micro-units (the
     # q111/q114 quantize-then-sum discipline, adopted after the r10
-    # A/B in scripts/q01ab.py measured it 0.64x the DECIMAL(28,10)
-    # cast path): each value quantizes to 1e-6 units with the repo's
+    # A/B measured it 0.64x the DECIMAL(28,10) cast path, BASELINE
+    # §5y): each value quantizes to 1e-6 units with the repo's
     # half-up-via-floor idiom — EXACT here because the true values
     # carry <= 6 decimal digits (price 2dp, disc_price 4dp, charge
     # 6dp), so value*1e6 is an integer and the double's ~1e-12

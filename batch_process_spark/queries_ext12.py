@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators.caching import memoized_persist
-from batch_process_spark.queries import _q, _t
+from batch_process_spark.queries import _pin_session_confs, _q, _t
 
 # ---------------------------------------------------------------------------
 # q186: bounded-hop cheapest route over the weighted co-purchase graph
@@ -1068,8 +1068,7 @@ def q196_streaming_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.queries_ext8 import _staged_event_slices
     from batch_process_spark.streaming.windows import run_stream_to_memory
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
     d, write_slice = _staged_event_slices(sf_dir, "q196")
 
     conv = F.when(F.col("value") >= float(_CONV_THRESH), 1).otherwise(0)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
 from batch_process_spark.operators.asof import asof_join
-from batch_process_spark.queries import _q, _t, round_half_up
+from batch_process_spark.queries import _pin_session_confs, _q, _t, round_half_up
 from batch_process_spark.streaming.windows import session_agg, tumbling_window_agg
 
 
@@ -360,8 +360,7 @@ def q44_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked, not assumed)."""
     from batch_process_spark.streaming.windows import run_stream_to_memory
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
 
     # streaming file sources take a directory; stage the single-file
     # table behind a memoized symlink dir

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
-from batch_process_spark.queries import _q, _t
+from batch_process_spark.queries import _pin_session_confs, _q, _t
 
 def _events_stream_schema(sf_dir: str) -> str:
     """Streaming sources need an explicit schema. The generator has
@@ -432,8 +432,7 @@ def q71_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds state; unbounded here because the corpus is finite."""
     from batch_process_spark.streaming.windows import run_stream_to_memory
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
 
     def transform(stream):
         dup = stream.select("event_id", "user_id", "event_type").unionByName(
@@ -470,8 +469,7 @@ def q72_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink; the oracle is the identical batch join."""
     from batch_process_spark.streaming.windows import run_stream_to_memory
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     n_cust = 1500
 

@@ -34,7 +34,7 @@ from batch_process_spark.operators.sketches import (
     hll_hash_cols,
     hll_register_table,
 )
-from batch_process_spark.queries import _q, _t
+from batch_process_spark.queries import _pin_session_confs, _q, _t
 
 
 # ---------------------------------------------------------------------------
@@ -411,8 +411,7 @@ def q131_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from batch_process_spark.streaming.windows import run_stream_to_memory
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
 
     d, write_slice = _staged_event_slices(sf_dir, "q131")
 
@@ -471,8 +470,7 @@ def q134_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.streaming.stateful import running_totals_cents_stream
     from batch_process_spark.streaming.windows import run_stream_to_memory
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
 
     d, write_slice = _staged_event_slices(sf_dir, "q134")
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
 from batch_process_spark.operators.caching import memoized_persist
-from batch_process_spark.queries import _q, _t
+from batch_process_spark.queries import _pin_session_confs, _q, _t
 
 #: q153's memoized (impressions, clicks) feed-dir pair — see the wipe
 #: discipline at the use site.
@@ -603,8 +603,7 @@ def q144_streaming_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_spark.queries_ext8 import _staged_event_slices
     from batch_process_spark.streaming.windows import run_stream_to_memory
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
     d, write_slice = _staged_event_slices(sf_dir, "q144")
 
     # The check EXPRESSIONS and NAMES come from the same helper the
@@ -982,8 +981,7 @@ def q150_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_window_agg,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
     d, write_slice = _staged_event_slices(sf_dir, "q150")
 
     def transform(stream):
@@ -1188,7 +1186,7 @@ def q153_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_interval_join,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_confs(spark)
     si = "ad_id int, imp_ts timestamp"
     sc = "ad_id int, click_ts timestamp, click_value double"
     # memoized feed dirs, WIPED per invocation: repeated bench/selfcheck

@@ -78,11 +78,3 @@ def safe_json_table(spark: SparkSession, path: str, schema: str | None = None) -
     if schema:
         reader = reader.schema(schema + ", _corrupt_record string")
     return reader.json(path)
-
-
-def lenient_cast(col: Column | str, dtype: str = "double") -> Column:
-    """Lenient coercion: cast failure -> NULL (pandas-style), matching
-    the reference's skip-non-numeric semantics. (Session must run with
-    ANSI off — see session factory.)"""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(dtype)

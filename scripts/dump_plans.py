@@ -85,7 +85,7 @@ NOTES = {
     "q140_entity_resolution": "the part table is scanned once into the PERSISTED name dictionary (pair probe, pair build, and the re-key join all read the materialized frame); fuzzy pairing, component resolution, and canonical election all run at dictionary granularity (64 rows)",
     "q202_source_ngram_overlap": "source-pair comparison joins on the GRAM over a distinct (source, gram) frame — fan-out bounded by source cardinality per gram, never doc x doc; per-source set sizes ride two tiny broadcasts",
     "q204_ngram_novelty_curve": "every gram reduces to its first doc via one partial-agg min at gram granularity; the unpartitioned window only ever sees the 10 decile rows (bounded by construction)",
-    "q205_product_quantization": "PQ train+encode: (vec_id, sub) partial aggs against a codebook frame AQE broadcasts while small (no forced hint — huge m*k degrades to shuffle join instead of OOM); per-vector md5 over sub-ordered codes; production path is the map-only fused Arrow kernel (pqprobe: 0 B/vec)",
+    "q205_product_quantization": "PQ train+encode: (vec_id, sub) partial aggs against a codebook frame AQE broadcasts while small (no forced hint — huge m*k degrades to shuffle join instead of OOM); per-vector md5 over sub-ordered codes; production path is the map-only fused Arrow kernel (BASELINE §5r: 0 B/vec)",
     "q206_pq_adc_topk": "ADC search: queries x m x k LUT built by one tiny agg and broadcast into the codes join; corpus side partial-aggs to one 8-byte (query, vec) sum before the exchange; ranking on the rounded distance",
     "q207_sliding_span_dedup": "spans assemble ONCE in a fused Arrow kernel (mapInPandas, byte-identical md5 keys; 2x the codegen slice+join assembly), repartition on h, (h,doc_id) pre-agg exchange-free, distinct-doc count as a COUNT WINDOW over h — no self-join (Catalyst planned no ReusedExchange across the old stats join, so assembly ran twice)",
     "q208_packing_efficiency": "one grouped agg over the per-shard-parallel packing window (q77's shape); no global window",

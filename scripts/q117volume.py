@@ -1,5 +1,5 @@
 """q117 volume cell (VERDICT r13 item 3): run q117_prefix_filter_join
-on the near-cap group fixture (spanskewprobe.synth_nearcap — n/10
+on the near-cap group fixture (spantier.synth_nearcap — n/10
 groups of 10 identical 48-word docs, so every group emits its full
 45-pair clique and every prefix token collides exactly group-wide) at
 one or more sizes, 1 warm + 3 steady noop trials each, and record the
@@ -18,7 +18,7 @@ import json
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 
 def main() -> None:
@@ -28,6 +28,7 @@ def main() -> None:
     import os
 
     from batch_process_spark.session import get_spark
+    from scripts.spantier import synth_nearcap
 
     import __spark_entry__ as entry
 
@@ -35,12 +36,10 @@ def main() -> None:
     qs = entry.queries()
     q = qs["q117_prefix_filter_join"]
 
-    report: dict = {"fixture": "spanskewprobe.synth_nearcap", "cells": []}
+    report: dict = {"fixture": "spantier.synth_nearcap", "cells": []}
     for n in sizes:
         path = f"/tmp/spanskew_{n}"
         if not os.path.isdir(f"{path}/documents.parquet"):
-            from scripts.spanskewprobe import synth_nearcap
-
             synth_nearcap(spark, n, path)
         spark.sparkContext.setJobDescription(f"q117volume n={n} warm")
         t0 = time.time()

@@ -16,8 +16,8 @@ Usage:
     python scripts/spantier.py <out.json> [n_docs] [query ...]
 defaults: n_docs=1000000, queries=q219_span_attribution q247_span_containment
 
-The fixture is planted at /tmp/spanskew_<n> (spanskewprobe.synth_nearcap)
-if missing. Run on an idle host; each query gets a fresh memo (the
+The fixture is planted at /tmp/spanskew_<n> (``synth_nearcap`` below) if
+missing. Run on an idle host; each query gets a fresh memo (the
 queries share the occurrence frame, so q247 after q219 rides the warm
 cache — that IS the production shape and is what we pin).
 """
@@ -28,6 +28,48 @@ import sys
 import time
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
+
+WORDS = 48  # words per document: 41 distinct 8-word spans each
+GROUP = 10  # = the span queries' df cap: every span sits exactly AT it
+
+
+def _alpha(i: int) -> str:
+    """Bijective base-26 letters for ``i`` (a, b, ..., z, ba, ...)."""
+    s = ""
+    i = int(i)
+    while True:
+        s = chr(ord("a") + i % 26) + s
+        i //= 26
+        if i == 0:
+            return s
+
+
+def synth_nearcap(spark, n: int, path: str) -> None:
+    """Write ``path``/documents.parquet: n/GROUP groups of GROUP
+    identical WORDS-word documents with no span shared across groups,
+    so every span survives the df cap at maximal fan-out."""
+    import pandas as pd
+
+    assert n % GROUP == 0
+
+    def gen(it):
+        for pdf in it:
+            rows = []
+            for i in pdf["id"].to_numpy():
+                i = int(i)
+                g = i // GROUP
+                rows.append((i, " ".join(
+                    f"g{_alpha(g)}x{_alpha(j)}" for j in range(WORDS)
+                )))
+            yield pd.DataFrame(rows, columns=["doc_id", "text"])
+
+    (
+        spark.range(n)
+        .repartition(32)
+        .mapInPandas(gen, schema="doc_id long, text string")
+        .write.mode("overwrite")
+        .parquet(f"{path}/documents.parquet")
+    )
 
 
 def main() -> None:
@@ -42,8 +84,6 @@ def main() -> None:
 
     spark = get_spark("spantier")
     if not os.path.isdir(f"{path}/documents.parquet"):
-        from scripts.spanskewprobe import synth_nearcap
-
         synth_nearcap(spark, n, path)
 
     import __spark_entry__ as entry

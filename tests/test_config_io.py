@@ -178,3 +178,23 @@ def test_invalidate_tables_drops_memo(spark):
     ), "plan-cache entries for the touched sf_dir must be dropped"
     assert invalidate_tables(sf) >= 1  # whole-dir form drops the rest
     assert (sf, "nation") not in _SESSION_MEMO[spark]
+
+
+def test_stream_query_pins_confs_on_a_vanilla_session(spark):
+    """A stream query that reads no table through ``_t()`` still pins
+    the catalog's session confs: q44 run first on a derived session with
+    ANSI on and a non-UTC time zone returns the engine session's rows
+    and leaves the derived session at UTC, ANSI off and nanosAsLong on."""
+    import __spark_entry__ as entrymod
+
+    sf = "/root/testdata/sf0.001"
+    q44 = entrymod.queries()["q44_streaming_tumbling"]
+    want = sorted(tuple(r) for r in q44(spark, sf).collect())
+    vanilla = spark.newSession()
+    vanilla.conf.set("spark.sql.ansi.enabled", "true")
+    vanilla.conf.set("spark.sql.session.timeZone", "America/New_York")
+    vanilla.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    assert sorted(tuple(r) for r in q44(vanilla, sf).collect()) == want
+    assert vanilla.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert vanilla.conf.get("spark.sql.ansi.enabled") == "false"
+    assert vanilla.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"

@@ -334,7 +334,7 @@ def test_brute_force_topk_nan_ranks_first(spark):
 def test_connected_components_report_and_no_driver_pass(spark):
     """The distributed branch reports its telemetry (strategy + label
     propagation rounds) and labels a generated chain graph correctly —
-    the same shape scripts/graphprobe.py runs at 10M+ pairs. Forcing
+    the same shape BASELINE §5f measures at 10M+ pairs. Forcing
     'distributed' must also skip the auto-arbitration count (a full
     extra pass over the pair stream at real scale): the driver path
     reports rounds=0, the distributed path reports the chain diameter

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from batch_process_spark.operators import joins
 
 SF = "/root/testdata/sf0.001"
 
@@ -76,7 +77,7 @@ def test_broadcast_gate_falls_back_to_shuffle(spark, qs, monkeypatch):
     any underlying-table change)."""
     from batch_process_spark.queries import invalidate_tables
 
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_CAP_BYTES", "1")
+    monkeypatch.setattr(joins, "BROADCAST_CAP_BYTES", 1)
     invalidate_tables()
     try:
         p29 = plan_of(qs["q29_shipping_priority"](spark, SF))
@@ -94,7 +95,7 @@ def test_broadcast_gate_falls_back_to_shuffle(spark, qs, monkeypatch):
         assert "SortMergeJoin" not in p30
     finally:
         # plans built under the forced cap must not leak to later tests
-        monkeypatch.delenv("SPARK_GRAFT_BROADCAST_CAP_BYTES")
+        monkeypatch.undo()
         invalidate_tables()
 
 
@@ -333,7 +334,7 @@ def test_swept_queries_gate_both_shapes(spark, qs, monkeypatch):
         tree = plan_of(qs[name](spark, SF)).split("\n\n")[0]
         assert "BroadcastHashJoin" in tree, name  # below cap: broadcast kept
         assert "SortMergeJoin" not in tree, name
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_CAP_BYTES", "1")
+    monkeypatch.setattr(joins, "BROADCAST_CAP_BYTES", 1)
     invalidate_tables()
     try:
         # The gated (previously hint-forced) build side must now
@@ -350,7 +351,7 @@ def test_swept_queries_gate_both_shapes(spark, qs, monkeypatch):
         assert "ShuffledHashJoin" in t48  # the gated customer side shuffles
         assert "SortMergeJoin" not in t48
     finally:
-        monkeypatch.delenv("SPARK_GRAFT_BROADCAST_CAP_BYTES")
+        monkeypatch.undo()
         invalidate_tables()
 
 
@@ -375,7 +376,7 @@ def test_round7_gated_sites_both_shapes(spark, qs, monkeypatch):
         tree = plan_of(qs[name](spark, SF)).split("\n\n")[0]
         assert "BroadcastExchange" in tree, name  # below cap: broadcast kept
         assert "SortMergeJoin" not in tree, name
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_CAP_BYTES", "1")
+    monkeypatch.setattr(joins, "BROADCAST_CAP_BYTES", 1)
     invalidate_tables()
     try:
         # q66: the anti-join build side must shuffle; the part dim is
@@ -399,7 +400,7 @@ def test_round7_gated_sites_both_shapes(spark, qs, monkeypatch):
         assert "ShuffledHashJoin" in t117
         assert "SortMergeJoin" not in t117
     finally:
-        monkeypatch.delenv("SPARK_GRAFT_BROADCAST_CAP_BYTES")
+        monkeypatch.undo()
         invalidate_tables()
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from batch_process_spark.operators import pq
+from batch_process_spark.operators import joins, pq
 
 # 4-dim vectors, subdim=2 -> m=2 subspaces. Two tight groups per
 # subspace around (0,0) and (10,10): vectors 0/1 are the init seeds
@@ -508,7 +508,7 @@ def test_ivfpq_write_read_roundtrip_serves_identically(spark, tmp_path):
 
 
 def test_exact_rerank_broadcasts_candidates(spark):
-    """r13 servingprobe finding: the bounded candidate frame's Catalyst
+    """BASELINE §5u serving finding: the bounded candidate frame's Catalyst
     size estimate derives from the corpus-sized codes frame, so past
     the auto-broadcast threshold the rerank join silently flipped to a
     sort-merge shuffling the float corpus (1.6 MB -> 525 MB per batch
@@ -554,7 +554,7 @@ def test_exact_rerank_degenerate_batch_shuffles_instead_of_erroring(
         tuple(r) for r in scorer(emb.select("vec_id", "embedding"), queries, k=2).collect()
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_CAP_BYTES", "1")
+    monkeypatch.setattr(joins, "BROADCAST_CAP_BYTES", 1)
     out = scorer(emb.select("vec_id", "embedding"), queries, k=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the cand-side corpus join is shuffled now; only the tiny query

@@ -12,7 +12,11 @@ from batch_process_spark.sources.filetree import (
     parse_dict_text,
     read_tree_texts,
 )
-from batch_process_spark.sources.readers import csv_numeric_column, sniff_numeric_values
+from batch_process_spark.sources.readers import (
+    csv_numeric_column,
+    safe_json_table,
+    sniff_numeric_values,
+)
 from batch_process_spark.sources.report_parser import (
     parse_blade_load_files,
     parse_blade_load_text,
@@ -118,6 +122,17 @@ def test_csv_numeric_column(spark, tree):
     # non-numeric column lenient -> empty
     out2 = csv_numeric_column(spark, str(tree / "group_A" / "run1" / "b.csv"), "h2")
     assert out2.count() == 0
+
+
+@pytest.mark.parametrize("schema", [None, "a long, b string"], ids=["inferred", "given"])
+def test_safe_json_table_keeps_corrupt_files_as_data(spark, tmp_path, schema):
+    (tmp_path / "good.json").write_text('[\n  {"a": 1, "b": "x"},\n  {"a": 2,\n   "b": "y"}\n]\n')
+    bad = '{"a": 3,\n "b": '
+    (tmp_path / "bad.json").write_text(bad)
+    df = safe_json_table(spark, str(tmp_path), schema)
+    assert "_corrupt_record" in df.columns
+    rows = sorted(((r["a"], r["b"], r["_corrupt_record"]) for r in df.collect()), key=repr)
+    assert rows == sorted([(1, "x", None), (2, "y", None), (None, None, bad)], key=repr)
 
 
 REPORT = """
