@@ -28,11 +28,19 @@ Defaults are tuned so that the same code runs correctly on local[N]
   Only a launch on the bare Spark class path takes this path: with
   ``SPARK_CONF_DIR``, ``HADOOP_CONF_DIR``, extra jars or the user's own
   CDS flags the launch command is unchanged.
+- Spark's cache of compiled whole-stage classes holds
+  ``CODEGEN_CACHE_ENTRIES`` (4096) entries, not 100, so a session that
+  repeats a catalog pass keeps every class it compiled. At 100 entries
+  each steady perfbench catalog pass recompiled 203 of its 236 classes
+  in Janino. Generated class names leave out the codegen stage id,
+  which AQE assigns in a timing-dependent order, so a repeat run finds
+  its classes in the cache. ``codegen_counters`` reads that layer.
 """
 
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -40,6 +48,8 @@ from batch_process_spark import cds
 
 DEFAULT_SHUFFLE_PARTITIONS = max(8, os.cpu_count() or 8)
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# spark.sql.codegen.cache.maxEntries (conf comment in get_spark)
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -114,6 +124,29 @@ def get_spark(
         "spark.sql.files.maxPartitionBytes": "32m",
         # the engine's worker daemon (module docstring)
         "spark.python.daemon.module": "batch_process_spark.pydaemon",
+        # Compiled whole-stage classes live in a per-JVM LRU (a static
+        # conf, default 100 entries). The 18 perfbench catalog queries
+        # compile 236 distinct classes and every pass runs them in the
+        # same order, so at 100 the LRU evicted each class before its
+        # next use: every steady pass recompiled 203 classes (0-4 at
+        # this size), and catalog steady_total_s median went 6.09 ->
+        # 3.76 s, 10/10 pairs (4-vCPU VM, codegencache_r18.json). The
+        # cold runs of all 247 catalog queries compile 3,405 classes
+        # (scripts/catalogtime.py at sf0.01), so 4096 holds the whole
+        # catalog. At the end of that sweep the driver held 777 MB of
+        # heap after a GC and 107 MB of Metaspace (556 and 96 MB on a
+        # 4g driver). On a cluster the same static conf sizes each
+        # executor's cache.
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        # The cache key is the generated source, and by default each
+        # whole-stage class is named after its codegen stage id. AQE
+        # numbers the stages it re-plans in the order their inputs
+        # finish, so a repeat run of a multi-stage query often got new
+        # ids and recompiled: 168 of 170 classes compiled by repeat runs
+        # of ten such catalog queries (q154, q169, q132, ...) differed
+        # only in that id. Without it in the name those repeat runs
+        # compiled 14 (sf0.01, 4-vCPU VM).
+        "spark.sql.codegen.useIdInClassName": "false",
     }
     if extra_conf:
         conf.update(extra_conf)
@@ -126,3 +159,36 @@ def get_spark(
         spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+class CodegenCounters(NamedTuple):
+    """Whole-stage codegen work done in this JVM since it started.
+
+    ``classes`` counts Janino compiles, i.e. codegen cache misses;
+    ``compile_ms`` is the wall time spent in them. ``source_bytes_mean``
+    is the mean size of the compiled Java source, from Spark's
+    histogram, whose sampling reservoir weights recent compiles, so it
+    has no exact sum to take deltas of. In local mode the executors
+    share the driver JVM and are counted; on a cluster only the
+    driver's compiles are.
+    """
+
+    classes: int
+    compile_ms: float
+    source_bytes_mean: float
+
+    def since(self, earlier: "CodegenCounters") -> tuple[int, float]:
+        """(classes, compile_ms) compiled between ``earlier`` and this reading."""
+        return self.classes - earlier.classes, round(self.compile_ms - earlier.compile_ms, 1)
+
+
+def codegen_counters(spark: SparkSession) -> CodegenCounters:
+    """Read Spark's ``CodegenMetrics`` and ``CodeGenerator.compileTime``."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return CodegenCounters(
+        classes=metrics.METRIC_COMPILATION_TIME().getCount(),
+        compile_ms=nanos / 1e6,
+        source_bytes_mean=round(metrics.METRIC_SOURCE_CODE_SIZE().getSnapshot().getMean(), 1),
+    )

@@ -152,9 +152,10 @@ def parse_blade_load_files(
 ):
     """Run the report parser over (id_cols..., text) rows -> long table.
 
-    1->N row expansion via Arrow batches; a malformed file yields zero
-    rows rather than failing the job (errors-as-data — pair with
-    ``parse_errors`` below for the per-file status stream).
+    1->N row expansion via Arrow batches. A malformed file (one whose
+    text makes ``parse_blade_load_text`` raise) is dropped: it yields
+    zero rows, does not fail the job, and is not counted anywhere.
+    A counted error output is ROADMAP item I.
     """
     import pandas as pd
 

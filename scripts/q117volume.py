@@ -15,20 +15,19 @@ defaults: sizes = 250000 500000 1000000
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, __file__.rsplit("/", 2)[0])
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
     out_path = sys.argv[1]
     sizes = [int(float(s)) for s in sys.argv[2:]] or [250_000, 500_000, 1_000_000]
 
-    import os
-
     from batch_process_spark.session import get_spark
-    from scripts.spantier import synth_nearcap
+    from scripts.spantier import nearcap_fixture
 
     import __spark_entry__ as entry
 
@@ -38,9 +37,7 @@ def main() -> None:
 
     report: dict = {"fixture": "spantier.synth_nearcap", "cells": []}
     for n in sizes:
-        path = f"/tmp/spanskew_{n}"
-        if not os.path.isdir(f"{path}/documents.parquet"):
-            synth_nearcap(spark, n, path)
+        path = nearcap_fixture(spark, n)
         spark.sparkContext.setJobDescription(f"q117volume n={n} warm")
         t0 = time.time()
         q(spark, path).write.format("noop").mode("overwrite").save()

@@ -17,12 +17,13 @@ Usage: python scripts/selfcheck.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

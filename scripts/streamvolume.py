@@ -21,10 +21,11 @@ defaults: n_events=10_000_000, state_partitions=32
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -32,7 +33,6 @@ def main() -> None:
     n = int(float(sys.argv[2])) if len(sys.argv) > 2 else 10_000_000
     parts = int(sys.argv[3]) if len(sys.argv) > 3 else 32
 
-    import os
     import shutil
 
     from pyspark.sql import functions as F
