@@ -17,7 +17,9 @@ one call, ``release_all()``, which ``queries.invalidate_tables`` makes:
   span occurrence entry it sizes.
 - ``staged_slices``: parquet slices of a table, written to a temp dir
   per ``(sf_dir, prefix)`` and fed one per micro-batch by the stream
-  queries (q131/q134/q144/q150/q171-q173/q196/q214).
+  queries (q44/q71/q72 share one single-slice copy of events;
+  q131/q134/q144/q150/q171-q173/q196/q214). It is the engine's one
+  temp-dir memo and its one ``atexit`` hook.
 
 Measured traffic, one ``get_spark()`` session at sf0.01 (4 vCPUs): the 18
 bench queries make 2 puts (q18 shingles, one span frame) and 1 span hit on

@@ -39,17 +39,17 @@ def _q(name: str, oracle: str | None = None):
     (hundreds of Py4J round-trips, 0.1-0.7 s per query measured at the
     bench; the prepared-statement / cached-logical-plan feature of any
     engine). Invalidated by ``invalidate_tables`` together with the
-    table memos when underlying files are rewritten."""
+    table memos when underlying files are rewritten. The wrapper takes
+    its memo from ``_pin_session_confs``, so the session confs every
+    query depends on are pinned before the first build; no query pins
+    them itself."""
 
     def deco(fn):
         import functools
 
         @functools.wraps(fn)
         def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            try:
-                memo = _SESSION_MEMO.setdefault(spark, {})
-            except TypeError:  # non-weakref-able session stand-in
-                return fn(spark, sf_dir)
+            memo = _pin_session_confs(spark)
             key = ("__plan__", name, sf_dir)
             if key not in memo:
                 memo[key] = fn(spark, sf_dir)
@@ -117,11 +117,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (sf_dir, name)
     if key not in memo:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-            # Generator variant that ships ts as parquet TIMESTAMP(NANOS)
-            # (read as long under nanosAsLong): truncate to micros with
-            # integer DIV (matches DuckDB's ns->us truncation exactly).
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        if name == "events":
+            df = _events_ts(df)
         # MICROS-variant timestamps arrive as session-TZ TIMESTAMP via the
         # inferTimestampNTZ=false pin above (UTC session == DuckDB's naive
         # values, and filters stay pushdown-eligible). If an external
@@ -136,6 +133,56 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         memo[key] = df
     return memo[key]
+
+
+def _events_ts(df: DataFrame) -> DataFrame:
+    """``events.ts`` as a session-TZ timestamp, batch or stream. The
+    generator variant that ships ts as parquet TIMESTAMP(NANOS) reads as
+    long (nanosAsLong): truncate to micros with integer DIV (matches
+    DuckDB's ns->us truncation exactly). TIMESTAMP(MICROS) passes as is."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
+
+
+def _events_stream(spark: SparkSession, sf_dir: str, tag: str = "events",
+                   n_slices: int = 1):
+    """The events table as a parquet file stream: ``(stream, feeds)``.
+
+    ``caching.staged_slices`` copies the table into ``n_slices``
+    contiguous slices in a temp dir memoized per ``(sf_dir, tag)``.
+    Slice 0 is there when the stream starts and each feed lands the
+    next, so a drive over ``feeds`` runs ``n_slices`` real micro-batches
+    (a dir that already holds every slice feeds nothing). Streaming
+    sources need a declared schema, so ts is declared as the footer
+    stores it and reaches the caller through ``_events_ts``, as ``_t``
+    serves it."""
+    import functools
+
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/events.parquet"
+    nanos = str(pq.read_schema(path).field("ts").type) == "timestamp[ns]"
+    schema = (
+        f"event_id long, ts {'long' if nanos else 'timestamp'}, user_id long, "
+        "event_type string, value double, props string"
+    )
+    d, write_slice = caching.staged_slices(
+        sf_dir, f"{tag}_slices_", lambda _: pq.read_table(path), n_slices
+    )
+    stream = _events_ts(spark.readStream.schema(schema).format("parquet").load(d))
+    return stream, [functools.partial(write_slice, i) for i in range(1, n_slices)]
+
+
+def _query_vectors_table(sf_dir: str):
+    """The serving streams' query vectors (vec_id < 15) as a pyarrow
+    Table in the serving schema ``(query_id, embedding)``, for
+    ``caching.staged_slices``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
+    return tbl.filter(pc.less(tbl["vec_id"], 15)).rename_columns(["query_id", "embedding"])
 
 
 def invalidate_tables(path: str | None = None) -> int:

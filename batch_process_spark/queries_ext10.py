@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators.caching import memoized_persist, staged_slices
-from batch_process_spark.queries import _q, _t
+from batch_process_spark.queries import _q, _query_vectors_table, _t
 
 # ---------------------------------------------------------------------------
 # q161: grid-bucketed planar radius join (spatial self-join, never all-pairs)
@@ -944,7 +944,6 @@ def q171_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q171_out",
         "append",
         feeds=[lambda: write_slice(1), lambda: write_slice(2)],
-        scoped_conf={"spark.sql.shuffle.partitions": "4"},
     )
     try:
         return result.distinct()
@@ -956,23 +955,8 @@ def q171_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q172: streaming top-k similarity serving (foreachBatch over the kernel)
 # ---------------------------------------------------------------------------
 
-def _q172_table(sf_dir: str):
-    """Query vectors (vec_id < 15) renamed to the serving schema."""
-    import os
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
-    )
-    return tbl.filter(pc.less(tbl["vec_id"], 15)).rename_columns(
-        ["query_id", "embedding"]
-    )
-
-
 def _q172_slices(sf_dir: str, n_slices: int = 3):
-    return staged_slices(sf_dir, "q172_slices_", _q172_table, n_slices)
+    return staged_slices(sf_dir, "q172_slices_", _query_vectors_table, n_slices)
 
 
 def _q172_oracle() -> str:
@@ -1020,25 +1004,11 @@ def q172_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the promoted sink contract: per-batch answers are bounded at
     # k x queries-in-batch rows, and the guard keeps that honest
     from batch_process_spark.streaming.similarity import bounded_collect_sink
-    from batch_process_spark.streaming.windows import drain_all
+    from batch_process_spark.streaming.windows import drive_query
 
     sink, collected = bounded_collect_sink(max_rows_per_batch=10 * 15)
     q = stream_topk_serving(stream, corpus, sink, k=10)
-    try:
-        drain_all(q)
-        write_slice(1)
-        drain_all(q)
-        write_slice(2)
-        drain_all(q)
-        # Same guard as streaming/windows.py::drive_stream_to_memory:
-        # processAllAvailable() on a TERMINATED query is a no-op, so a
-        # stream that died on a fed batch would silently return only
-        # batch 0's answers. Surface the stream's own error instead.
-        err = q.exception()
-        if err is not None:
-            raise err
-    finally:
-        q.stop()
+    drive_query(q, [lambda: write_slice(1), lambda: write_slice(2)])
     return spark.createDataFrame(
         collected, "query_id long, vec_id long, score double, rank int"
     )
@@ -1130,7 +1100,6 @@ def q173_streaming_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q173_out",
         "append",
         feeds=[lambda: write_slice(1), lambda: write_slice(2)],
-        scoped_conf={"spark.sql.shuffle.partitions": "4"},
     )
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators.caching import memoized_persist
-from batch_process_spark.queries import _pin_session_confs, _q, _t
+from batch_process_spark.queries import _events_stream, _q, _t
 
 # ---------------------------------------------------------------------------
 # q186: bounded-hop cheapest route over the weighted co-purchase graph
@@ -1061,34 +1061,15 @@ def q196_streaming_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric with honest small-n uncertainty, maintained without ever
     re-scanning history. NULL event_type stays its own group (single
     groupBy, never a join — the NULL-dropping seam)."""
-    from batch_process_spark.queries_ext3 import (
-        _events_stream_schema,
-        _normalize_stream_ts,
-    )
-    from batch_process_spark.queries_ext8 import _staged_event_slices
-    from batch_process_spark.streaming.windows import run_stream_to_memory
-
-    _pin_session_confs(spark)
-    d, write_slice = _staged_event_slices(sf_dir, "q196")
+    from batch_process_spark.streaming.windows import drive_stream_to_memory
 
     conv = F.when(F.col("value") >= float(_CONV_THRESH), 1).otherwise(0)
-
-    def transform(stream):
-        ev = _normalize_stream_ts(stream)
-        return ev.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(conv).cast("long").alias("conversions"),
-        )
-
-    agg = run_stream_to_memory(
-        spark,
-        d,
-        _events_stream_schema(sf_dir),
-        transform,
-        query_name="q196_out",
-        output_mode="complete",
-        feeds=[lambda: write_slice(1), lambda: write_slice(2)],
+    stream, feeds = _events_stream(spark, sf_dir, "q196", n_slices=3)
+    out = stream.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(conv).cast("long").alias("conversions"),
     )
+    agg = drive_stream_to_memory(spark, out, "q196_out", "complete", feeds=feeds)
     p = F.col("conversions").cast("double") / F.col("n_events")
     z = F.lit(float(_WILSON_Z))
     n = F.col("n_events").cast("double")

@@ -51,7 +51,7 @@ from batch_process_spark.operators.caching import (
     memoized_persist,
     staged_slices,
 )
-from batch_process_spark.queries import _q, _t
+from batch_process_spark.queries import _q, _query_vectors_table, _t
 
 _PQ_SUBDIM = 16  # 64-dim embeddings -> m = 4 subspaces
 _PQ_K = 4
@@ -1071,19 +1071,18 @@ def q214_streaming_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a value-level oracle, per batch. Per batch the scan touches m
     int64 codes per vector; the float corpus only sees the bounded
     candidate join."""
-    from batch_process_spark.queries_ext10 import _q172_table
     from batch_process_spark.streaming.similarity import (
         bounded_collect_sink,
         stream_topk_serving,
     )
-    from batch_process_spark.streaming.windows import drain_all
+    from batch_process_spark.streaming.windows import drive_query
 
     corpus = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cb = _codebook(spark, sf_dir)
     codes = memoized_persist(pq.pq_encode_fused(corpus, cb, _PQ_SUBDIM))
     scorer = pq.make_adc_scorer(cb, codes, _PQ_SUBDIM, rerank_factor=_Q214_RERANK)
 
-    d, write_slice = staged_slices(sf_dir, "q214_slices_", _q172_table)
+    d, write_slice = staged_slices(sf_dir, "q214_slices_", _query_vectors_table)
     stream = (
         spark.readStream.schema("query_id long, embedding array<float>")
         .format("parquet")
@@ -1091,17 +1090,7 @@ def q214_streaming_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink, collected = bounded_collect_sink(max_rows_per_batch=10 * 15)
     q = stream_topk_serving(stream, corpus, sink, k=10, scorer=scorer)
-    try:
-        drain_all(q)
-        write_slice(1)
-        drain_all(q)
-        write_slice(2)
-        drain_all(q)
-        err = q.exception()
-        if err is not None:
-            raise err
-    finally:
-        q.stop()
+    drive_query(q, [lambda: write_slice(1), lambda: write_slice(2)])
     return spark.createDataFrame(
         collected, "query_id long, vec_id long, score double, rank int"
     )

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
 from batch_process_spark.operators.asof import asof_join
-from batch_process_spark.queries import _pin_session_confs, _q, _t, round_half_up
+from batch_process_spark.queries import _events_stream, _q, _t, round_half_up
 from batch_process_spark.streaming.windows import session_agg, tumbling_window_agg
 
 
@@ -358,24 +358,14 @@ def q44_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the SAME oracle: the complete-mode result table must equal the
     batch aggregation value-for-value (unified batch/stream semantics,
     checked, not assumed)."""
-    from batch_process_spark.streaming.windows import run_stream_to_memory
+    from batch_process_spark.streaming.windows import drive_stream_to_memory
 
-    _pin_session_confs(spark)
-
-    # streaming file sources take a directory; stage the single-file
-    # table behind a memoized symlink dir
-    from batch_process_spark.queries_ext3 import (
-        _events_stream_schema,
-        _normalize_stream_ts,
-        _stage_stream_dir,
-    )
-
-    def transform(stream):
-        return tumbling_window_agg(_normalize_stream_ts(stream), width="1 hour", keys=["event_type"])
-
-    d = _stage_stream_dir(sf_dir)
-    return run_stream_to_memory(
-        spark, d, _events_stream_schema(sf_dir), transform, query_name="q44_out"
+    stream, _ = _events_stream(spark, sf_dir)
+    return drive_stream_to_memory(
+        spark,
+        tumbling_window_agg(stream, width="1 hour", keys=["event_type"]),
+        "q44_out",
+        "complete",
     )
 
 

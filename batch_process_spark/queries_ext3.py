@@ -12,61 +12,11 @@ disjunctive join predicates (Q19), exists/not-exists multi-correlation
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
-from batch_process_spark.queries import _pin_session_confs, _q, _t
-
-def _events_stream_schema(sf_dir: str) -> str:
-    """Streaming sources need an explicit schema. The generator has
-    shipped events.ts as both parquet TIMESTAMP(NANOS) (readable only
-    as long under nanosAsLong) and TIMESTAMP(MICROS); sniff the footer
-    with pyarrow so the declared schema matches the files on disk."""
-    import pyarrow.parquet as pq
-
-    ts_type = str(pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type)
-    ts_sql = "long" if ts_type == "timestamp[ns]" else "timestamp"
-    return (
-        f"event_id long, ts {ts_sql}, user_id long, "
-        "event_type string, value double, props string"
-    )
-
-
-def _normalize_stream_ts(stream: DataFrame) -> DataFrame:
-    """Canonicalize the streamed ts column to a session-TZ timestamp,
-    whichever physical encoding the files carry (long nanos / NTZ /
-    already-LTZ)."""
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if ts_type == "timestamp_ntz":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
-
-
-_STREAM_DIRS: dict[tuple[str, str], str] = {}
-
-
-def _stage_stream_dir(sf_dir: str, table: str = "events") -> str:
-    """Streaming file sources take a directory; symlink the single
-    parquet file into a temp dir — memoized per (sf_dir, table) so
-    repeated bench/selfcheck invocations reuse one dir instead of
-    leaking a fresh mkdtemp per call."""
-    key = (os.path.abspath(sf_dir), table)
-    d = _STREAM_DIRS.get(key)
-    if d is None or not os.path.isdir(d):
-        import atexit
-        import shutil
-
-        d = tempfile.mkdtemp(prefix=f"stream_{table}_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)  # symlink only, but reclaim anyway
-        os.symlink(os.path.abspath(f"{sf_dir}/{table}.parquet"), os.path.join(d, f"{table}.parquet"))
-        _STREAM_DIRS[key] = d
-    return d
+from batch_process_spark.queries import _events_stream, _q, _t
 
 
 @_q(
@@ -430,25 +380,16 @@ def q71_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated stream; the streaming result must equal it exactly.
     At scale the watermark variant (``dropDuplicatesWithinWatermark``)
     bounds state; unbounded here because the corpus is finite."""
-    from batch_process_spark.streaming.windows import run_stream_to_memory
+    from batch_process_spark.streaming.windows import drive_stream_to_memory
 
-    _pin_session_confs(spark)
-
-    def transform(stream):
-        dup = stream.select("event_id", "user_id", "event_type").unionByName(
-            stream.filter(F.col("event_id") % 7 == 0).select(
-                "event_id", "user_id", "event_type"
-            )
+    stream, _ = _events_stream(spark, sf_dir)
+    dup = stream.select("event_id", "user_id", "event_type").unionByName(
+        stream.filter(F.col("event_id") % 7 == 0).select(
+            "event_id", "user_id", "event_type"
         )
-        return dup.dropDuplicates(["event_id"])
-
-    return run_stream_to_memory(
-        spark,
-        _stage_stream_dir(sf_dir),
-        _events_stream_schema(sf_dir),
-        transform,
-        query_name="q71_out",
-        output_mode="append",
+    )
+    return drive_stream_to_memory(
+        spark, dup.dropDuplicates(["event_id"]), "q71_out", "append"
     )
 
 
@@ -467,31 +408,21 @@ def q72_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension (customer, broadcast per micro-batch) and aggregates per
     segment — the streaming form of J1 label enrichment. Complete-mode
     memory sink; the oracle is the identical batch join."""
-    from batch_process_spark.streaming.windows import run_stream_to_memory
+    from batch_process_spark.streaming.windows import drive_stream_to_memory
 
-    _pin_session_confs(spark)
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     n_cust = 1500
-
-    def transform(stream):
-        return (
-            stream.withColumn("c_custkey", (F.col("user_id") % n_cust) + 1)
-            .join(joins.gated_broadcast(cust), "c_custkey")
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
+    stream, _ = _events_stream(spark, sf_dir)
+    out = (
+        stream.withColumn("c_custkey", (F.col("user_id") % n_cust) + 1)
+        .join(joins.gated_broadcast(cust), "c_custkey")
+        .groupBy("c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-
-    return run_stream_to_memory(
-        spark,
-        _stage_stream_dir(sf_dir),
-        _events_stream_schema(sf_dir),
-        transform,
-        query_name="q72_out",
-        output_mode="complete",
     )
+    return drive_stream_to_memory(spark, out, "q72_out", "complete")
 
 
 def _curation_oracle() -> str:

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batch_process_spark.operators.caching import memoized_persist
-from batch_process_spark.queries import _pin_session_confs, _q, _t, round_half_up
+from batch_process_spark.queries import _q, _t, round_half_up
 from batch_process_spark.queries_ext import DUCK_TOKENS
 
 _TOK = DUCK_TOKENS.format(t="text")
@@ -561,10 +561,6 @@ def q99_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         tumbling_window_agg,
     )
 
-    # Session-wide on purpose (NOT scoped): the result's timestamps
-    # render in the session TZ at the driver's later collect, so UTC
-    # must outlive this call.
-    _pin_session_confs(spark)
     schema = "user_id int, ts timestamp, value double"
     # the feed dir is gone once the stream stops: the result is the
     # memory-sink table, which does not read it
@@ -651,9 +647,6 @@ def q100_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_interval_join,
     )
 
-    # Session-wide on purpose (see q99): timestamps render in session
-    # TZ at the driver's later collect, so UTC must outlive this call.
-    _pin_session_confs(spark)
     si = "ad_id int, imp_ts timestamp"
     sc = "ad_id int, click_ts timestamp, click_value double"
     # both feed dirs go once the stream stops (see q99)

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
-from batch_process_spark.operators.caching import memoized_persist, staged_slices
+from batch_process_spark.operators.caching import memoized_persist
 from batch_process_spark.operators.sketches import (
     bloom_bit_positions,
     bloom_probe,
@@ -34,7 +34,7 @@ from batch_process_spark.operators.sketches import (
     hll_hash_cols,
     hll_register_table,
 )
-from batch_process_spark.queries import _pin_session_confs, _q, _t
+from batch_process_spark.queries import _events_stream, _q, _t
 
 
 # ---------------------------------------------------------------------------
@@ -368,22 +368,6 @@ def q129_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q131: streaming HLL — registers maintained across real micro-batches
 # ---------------------------------------------------------------------------
 
-def _staged_event_slices(sf_dir: str, tag: str, n_slices: int = 3):
-    """Events-table micro-batch slices for the q131/q134/q144/q150/q196
-    streams, staged by ``caching.staged_slices`` under the prefix
-    ``f"{tag}_slices_"``. Returns (dir, write_slice) with slice 0
-    already written."""
-
-    def _events_table(sf_dir_: str):
-        import os
-
-        import pyarrow.parquet as pq
-
-        return pq.read_table(os.path.join(sf_dir_, "events.parquet"))
-
-    return staged_slices(sf_dir, f"{tag}_slices_", _events_table, n_slices)
-
-
 @_q(
     "q131_streaming_hll",
     f"""
@@ -405,31 +389,14 @@ def q131_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as q127 (unified batch/stream semantics, checked not
     assumed). The estimate step runs as a tiny batch job on the final
     1280-row result table."""
-    from batch_process_spark.queries_ext3 import (
-        _events_stream_schema,
-        _normalize_stream_ts,
+    from batch_process_spark.streaming.windows import drive_stream_to_memory
+
+    stream, feeds = _events_stream(spark, sf_dir, "q131", n_slices=3)
+    out = hll_register_table(
+        stream.select("event_type", _hll_key().alias("key")), "key", ["event_type"], p=_HLL_P
     )
-    from batch_process_spark.streaming.windows import run_stream_to_memory
-
-    _pin_session_confs(spark)
-
-    d, write_slice = _staged_event_slices(sf_dir, "q131")
-
-    def transform(stream):
-        ev = _normalize_stream_ts(stream)
-        key = _hll_key()
-        return hll_register_table(
-            ev.select("event_type", key.alias("key")), "key", ["event_type"], p=_HLL_P
-        )
-
-    regs = run_stream_to_memory(
-        spark,
-        d,
-        _events_stream_schema(sf_dir),
-        transform,
-        query_name="q131_out",
-        output_mode="complete",
-        feeds=[lambda: write_slice(1), lambda: write_slice(2)],
+    regs = drive_stream_to_memory(
+        spark, out, "q131_out", "complete", feeds=feeds
     ).withColumnRenamed("event_type", "scope")
 
     est = hll_estimate(regs, ["scope"], p=_HLL_P)
@@ -466,22 +433,12 @@ def q134_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeout-evictable — the distributed replacement for the
     reference's mutable per-path ProcessingContext accumulators
     (reference `decorators/processor.py:16-102`)."""
-    from batch_process_spark.queries_ext3 import _events_stream_schema
     from batch_process_spark.streaming.stateful import running_totals_cents_stream
-    from batch_process_spark.streaming.windows import run_stream_to_memory
+    from batch_process_spark.streaming.windows import drive_stream_to_memory
 
-    _pin_session_confs(spark)
-
-    d, write_slice = _staged_event_slices(sf_dir, "q134")
-
-    out = run_stream_to_memory(
-        spark,
-        d,
-        _events_stream_schema(sf_dir),
-        running_totals_cents_stream,
-        query_name="q134_out",
-        output_mode="update",
-        feeds=[lambda: write_slice(1), lambda: write_slice(2)],
+    stream, feeds = _events_stream(spark, sf_dir, "q134", n_slices=3)
+    out = drive_stream_to_memory(
+        spark, running_totals_cents_stream(stream), "q134_out", "update", feeds=feeds
     )
     # Update-mode sink holds every emission; the final state per user
     # is the row with the largest n_events (strictly increasing).

@@ -19,11 +19,7 @@ from pyspark.sql import functions as F
 
 from batch_process_spark.operators import joins
 from batch_process_spark.operators.caching import memoized_persist
-from batch_process_spark.queries import _pin_session_confs, _q, _t
-
-#: q153's memoized (impressions, clicks) feed-dir pair — see the wipe
-#: discipline at the use site.
-_Q153_DIRS: dict = {}
+from batch_process_spark.queries import _events_stream, _q, _t
 
 # ---------------------------------------------------------------------------
 # q137: gap filling over a per-user date spine with LOCF carry-forward
@@ -596,15 +592,7 @@ def q144_streaming_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (check_name, violations, passed) runs as a tiny batch job on the
     final result table. This is how a 100 TB ingest watches quality
     without re-scanning history: the counters ARE the monitor."""
-    from batch_process_spark.queries_ext3 import (
-        _events_stream_schema,
-        _normalize_stream_ts,
-    )
-    from batch_process_spark.queries_ext8 import _staged_event_slices
-    from batch_process_spark.streaming.windows import run_stream_to_memory
-
-    _pin_session_confs(spark)
-    d, write_slice = _staged_event_slices(sf_dir, "q144")
+    from batch_process_spark.streaming.windows import drive_stream_to_memory
 
     # The check EXPRESSIONS and NAMES come from the same helper the
     # q142 batch gate uses (operators/quality.py::_column_check_expr) —
@@ -624,21 +612,11 @@ def q144_streaming_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     named = [_column_check_expr(c) for c in checks]
 
-    def transform(stream):
-        ev = _normalize_stream_ts(stream)
-        return ev.agg(
-            *[expr.cast("long").alias(f"__c{i}") for i, (_, expr) in enumerate(named)]
-        )
-
-    counters = run_stream_to_memory(
-        spark,
-        d,
-        _events_stream_schema(sf_dir),
-        transform,
-        query_name="q144_out",
-        output_mode="complete",
-        feeds=[lambda: write_slice(1), lambda: write_slice(2)],
+    stream, feeds = _events_stream(spark, sf_dir, "q144", n_slices=3)
+    out = stream.agg(
+        *[expr.cast("long").alias(f"__c{i}") for i, (_, expr) in enumerate(named)]
     )
+    counters = drive_stream_to_memory(spark, out, "q144_out", "complete", feeds=feeds)
     rows = F.array(
         *[
             F.struct(
@@ -971,32 +949,18 @@ def q150_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's session bound is [min(ts), last event + gap], so the
     oracle emits max(ts) + INTERVAL 30 MINUTE as session_end — same
     contract, engine-portable."""
-    from batch_process_spark.queries_ext3 import (
-        _events_stream_schema,
-        _normalize_stream_ts,
-    )
-    from batch_process_spark.queries_ext8 import _staged_event_slices
     from batch_process_spark.streaming.windows import (
-        run_stream_to_memory,
+        drive_stream_to_memory,
         session_window_agg,
     )
 
-    _pin_session_confs(spark)
-    d, write_slice = _staged_event_slices(sf_dir, "q150")
-
-    def transform(stream):
-        return session_window_agg(
-            _normalize_stream_ts(stream), gap="30 minutes"
-        )
-
-    return run_stream_to_memory(
+    stream, feeds = _events_stream(spark, sf_dir, "q150", n_slices=3)
+    return drive_stream_to_memory(
         spark,
-        d,
-        _events_stream_schema(sf_dir),
-        transform,
-        query_name="q150_out",
-        output_mode="complete",
-        feeds=[lambda: write_slice(1), lambda: write_slice(2)],
+        session_window_agg(stream, gap="30 minutes"),
+        "q150_out",
+        "complete",
+        feeds=feeds,
     ).select("user_id", "session_start", "session_end", "n_events", "sum_value")
 
 
@@ -1176,7 +1140,6 @@ def q153_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream must buy with bounded per-key state — same
     ``stream_interval_join`` builder, ``how='left_outer'``.
     ``sf_dir`` unused: engine semantics, not data."""
-    import os
     import tempfile
     from datetime import datetime
 
@@ -1186,55 +1149,41 @@ def q153_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_interval_join,
     )
 
-    _pin_session_confs(spark)
     si = "ad_id int, imp_ts timestamp"
     sc = "ad_id int, click_ts timestamp, click_value double"
-    # memoized feed dirs, WIPED per invocation: repeated bench/selfcheck
-    # runs in one process must not leak a fresh mkdtemp pair per call
-    # (the _staged_event_slices discipline), and the staged batch
-    # SEQUENCE must rebuild identically each run — stale files from a
-    # prior run would double the feed
-    if "dirs" not in _Q153_DIRS:
-        import atexit
-        import shutil
-
-        pair = (tempfile.mkdtemp(prefix="q153_imp_"), tempfile.mkdtemp(prefix="q153_clk_"))
-        for d in pair:  # reclaim at interpreter exit
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _Q153_DIRS["dirs"] = pair
-    di, dc = _Q153_DIRS["dirs"]
-    for d in (di, dc):
-        for f in os.listdir(d):
-            os.unlink(os.path.join(d, f))
 
     def t(h, m):
         return datetime(2024, 1, 1, h, m)
 
-    append_feed(di, si, [(1, t(10, 0)), (2, t(10, 5))])
-    append_feed(dc, sc, [(1, t(10, 4), 1.0)])
-    feeds = [
-        # watermark -> min(11:00, 11:05) - 10 min = 10:50, past ad 2's
-        # horizon 10:15: its outer row becomes emittable
-        lambda: (append_feed(di, si, [(3, t(11, 0))]),
-                 append_feed(dc, sc, [(3, t(11, 5), 4.0)])),
-        # sentinel pair pushes the final watermark to 11:50 so every
-        # real impression's state is resolved before the query stops
-        lambda: (append_feed(di, si, [(99, t(12, 0))]),
-                 append_feed(dc, sc, [(99, t(12, 0), 9.0)])),
-    ]
-    out = run_two_streams_to_memory(
-        spark, di, si, dc, sc,
-        lambda l, r: stream_interval_join(
-            l, r, on="ad_id", left_ts="imp_ts", right_ts="click_ts",
-            max_delay="10 minutes", watermark="10 minutes",
-            how="left_outer",
-        ).select("l.ad_id", "imp_ts", "click_ts", "click_value"),
-        query_name="q153_out",
-        feeds=feeds,
-        scoped_conf={
-            "spark.sql.streaming.noDataMicroBatches.enabled": "true",
-        },
-    )
+    # the feed dirs go once the stream stops, as q99/q100's do: the
+    # result is the memory-sink table, which does not read them
+    with tempfile.TemporaryDirectory(prefix="q153_imp_") as di, \
+            tempfile.TemporaryDirectory(prefix="q153_clk_") as dc:
+        append_feed(di, si, [(1, t(10, 0)), (2, t(10, 5))])
+        append_feed(dc, sc, [(1, t(10, 4), 1.0)])
+        feeds = [
+            # watermark -> min(11:00, 11:05) - 10 min = 10:50, past ad 2's
+            # horizon 10:15: its outer row becomes emittable
+            lambda: (append_feed(di, si, [(3, t(11, 0))]),
+                     append_feed(dc, sc, [(3, t(11, 5), 4.0)])),
+            # sentinel pair pushes the final watermark to 11:50 so every
+            # real impression's state is resolved before the query stops
+            lambda: (append_feed(di, si, [(99, t(12, 0))]),
+                     append_feed(dc, sc, [(99, t(12, 0), 9.0)])),
+        ]
+        out = run_two_streams_to_memory(
+            spark, di, si, dc, sc,
+            lambda l, r: stream_interval_join(
+                l, r, on="ad_id", left_ts="imp_ts", right_ts="click_ts",
+                max_delay="10 minutes", watermark="10 minutes",
+                how="left_outer",
+            ).select("l.ad_id", "imp_ts", "click_ts", "click_value"),
+            query_name="q153_out",
+            feeds=feeds,
+            scoped_conf={
+                "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+            },
+        )
     return out.filter(F.col("ad_id") != 99)
 
 

@@ -137,77 +137,3 @@ def cached_parquet(
     if not os.path.exists(path):
         build().write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
-
-
-def zorder_value(a, b):
-    """Morton (Z-order) interleave of two NON-NEGATIVE int columns
-    (each truncated to 32 bits) as a single BIGINT Column — points
-    close in BOTH dimensions get close z-values, so a range-partitioned
-    sort on z gives every output file a TIGHT min/max box on BOTH
-    columns at once. Classic magic-number bit spreading (5 shift/mask
-    stages per operand), all inside whole-stage codegen — no UDF.
-
-    Callers normalize to non-negative ints first (rank, bucket id,
-    scaled value); negative inputs raise at write time via the domain
-    check in ``write_zordered``."""
-    from pyspark.sql import functions as F
-
-    def spread(x):
-        x = x.bitwiseAND(F.lit(0xFFFFFFFF))
-        x = x.bitwiseOR(F.shiftleft(x, 16)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        x = x.bitwiseOR(F.shiftleft(x, 8)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(0x3333333333333333))
-        x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(0x5555555555555555))
-        return x
-
-    from pyspark.sql import Column
-
-    ca = a if isinstance(a, Column) else F.col(a)
-    cb = b if isinstance(b, Column) else F.col(b)
-    return spread(ca.cast("long")).bitwiseOR(F.shiftleft(spread(cb.cast("long")), 1))
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order layout sink: range-partition + sort the rows by the
-    Morton interleave of (``col_a``, ``col_b``) before writing, so
-    every parquet file carries a tight min/max footer box on BOTH
-    columns — the multi-dimensional data-skipping lever (a plain sort
-    on one column gives perfect skipping on that column and NONE on
-    the other; Z-order trades a little of each for useful skipping on
-    both). Readers need no cooperation: parquet row-group stats prune
-    automatically for any engine. One range shuffle per write,
-    amortized over every downstream selective read — at 100 TB this is
-    the OPTIMIZE-ZORDER pass run after ingest. Both columns must be
-    non-negative integers (normalize first); violations fail the write
-    loudly rather than silently corrupting the curve."""
-    from pyspark.sql import functions as F
-
-    # The interleave spreads bit 31 of an operand to bit 62, and the
-    # odd-operand shiftleft lands it on bit 63 — the sign bit — so any
-    # value >= 2**31 would silently break the Morton sort order (and
-    # >= 2**32 aliases under the 32-bit mask). The documented fail-loud
-    # contract therefore bounds BOTH ends of the domain.
-    _max = F.lit(2**31)
-    guard = F.when(
-        (F.col(col_a) < 0) | (F.col(col_b) < 0)
-        | (F.col(col_a) >= _max) | (F.col(col_b) >= _max),
-        F.raise_error(
-            F.lit(f"write_zordered: value outside [0, 2^31) in {col_a}/{col_b}")
-        ),
-    ).otherwise(zorder_value(col_a, col_b))
-    zdf = df.withColumn("__z", guard)
-    (
-        zdf.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -78,7 +78,6 @@ def run_two_streams_to_memory(
     query_name: str = "join_out",
     output_mode: str = "append",
     feeds=None,
-    state_partitions: int | None = 4,
     scoped_conf: dict[str, str] | None = None,
 ):
     """Drive a two-source streaming query to completion (the two-input
@@ -87,16 +86,13 @@ def run_two_streams_to_memory(
     ``transform`` takes (left_stream, right_stream) and returns the
     joined stream; ``feeds`` are callables appending files to either
     directory, each followed by a full drain so the watermark advances
-    between real micro-batches. ``state_partitions`` /``scoped_conf``
-    as in ``run_stream_to_memory``."""
+    between real micro-batches. ``scoped_conf`` as in
+    ``run_stream_to_memory``."""
     from batch_process_spark.streaming.windows import drive_stream_to_memory
 
     l = spark.readStream.schema(left_schema).format("parquet").load(left_dir)
     r = spark.readStream.schema(right_schema).format("parquet").load(right_dir)
-    out = transform(l, r)
-    conf = dict(scoped_conf or {})
-    if state_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
     return drive_stream_to_memory(
-        spark, out, query_name, output_mode, feeds=feeds, scoped_conf=conf
+        spark, transform(l, r), query_name, output_mode, feeds=feeds,
+        scoped_conf=scoped_conf,
     )

@@ -148,6 +148,38 @@ def drain_all(q) -> None:
     q.processAllAvailable()
 
 
+def drive_query(q, feeds=()) -> None:
+    """The one drive loop for a started streaming query: drain, run
+    each ``feed`` callable followed by a full drain (so the watermark
+    advances between REAL micro-batches), raise the stream's own error
+    if it died, and stop it whatever happened.
+
+    processAllAvailable() on a TERMINATED query returns immediately: if
+    the stream died mid-run (transient executor loss under host load, a
+    failing foreachBatch body), the loop silently no-ops and the sink
+    still holds the last successful batch's output — a stale PARTIAL
+    result that reads as a wrong answer downstream. ``q.exception()``
+    surfaces the failure instead."""
+    try:
+        drain_all(q)
+        for feed in feeds:
+            feed()
+            drain_all(q)
+        err = q.exception()
+        if err is not None:
+            raise err
+    finally:
+        q.stop()
+
+
+# Stateful operators materialize one state store per shuffle partition
+# per micro-batch, so a tiny local drive at the session's 32 burns
+# seconds of pure store setup/commit. Every memory-sink drive pins
+# spark.sql.shuffle.partitions to this for the query's lifetime
+# (restored after); real deployments size it to the key cardinality.
+STATE_PARTITIONS = 4
+
+
 def drive_stream_to_memory(
     spark,
     out: DataFrame,
@@ -157,17 +189,17 @@ def drive_stream_to_memory(
     scoped_conf: dict[str, str] | None = None,
 ) -> DataFrame:
     """Shared driver for the memory-sink streaming runners: start the
-    query, drain, run each ``feed`` callable followed by a full drain
-    (so the watermark advances between REAL micro-batches), stop, and
-    return the result table.
+    query at ``STATE_PARTITIONS`` shuffle partitions, run ``drive_query``
+    over ``feeds`` and return the result table.
 
-    ``scoped_conf``: session confs pinned for the query's lifetime and
-    restored after — streaming queries read confs at ``.start()`` from
-    a fresh checkpoint, so the scoped override is safe, and restoring
-    keeps a shared session (selfcheck, pytest) from leaking timezone/
-    trigger/partition settings into later queries."""
-    prev = {k: spark.conf.get(k, None) for k in (scoped_conf or {})}
-    for k, v in (scoped_conf or {}).items():
+    ``scoped_conf``: further session confs pinned for the query's
+    lifetime and restored after — streaming queries read confs at
+    ``.start()`` from a fresh checkpoint, so the scoped override is
+    safe, and restoring keeps a shared session (selfcheck, pytest) from
+    leaking timezone/trigger/partition settings into later queries."""
+    conf = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS), **(scoped_conf or {})}
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
         spark.conf.set(k, v)
     try:
         q = (
@@ -176,23 +208,7 @@ def drive_stream_to_memory(
             .outputMode(output_mode)
             .start()
         )
-        try:
-            drain_all(q)
-            for feed in feeds or []:
-                feed()
-                drain_all(q)
-            # processAllAvailable() on a TERMINATED query returns
-            # immediately: if the stream died mid-run (transient
-            # executor loss under host load), the loop silently
-            # no-ops and the memory sink still holds the last
-            # successful complete-mode table — a stale PARTIAL
-            # result that reads as a wrong answer downstream.
-            # Surface the stream's own error instead.
-            err = q.exception()
-            if err is not None:
-                raise err
-        finally:
-            q.stop()
+        drive_query(q, feeds or ())
     finally:
         for k, v in prev.items():
             if v is None:
@@ -210,7 +226,6 @@ def run_stream_to_memory(
     query_name: str = "stream_out",
     output_mode: str = "complete",
     feeds=None,
-    state_partitions: int | None = 4,
     scoped_conf: dict[str, str] | None = None,
 ) -> DataFrame:
     """Drive a parquet-source streaming query to completion against a
@@ -222,25 +237,14 @@ def run_stream_to_memory(
     drains all available data before the next — multiple real
     micro-batches, which is what watermark/late-data semantics need
     (the watermark advances only BETWEEN batches, so single-batch
-    drains can never drop anything as late).
-
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    query's lifetime (restored after): stateful operators materialize
-    one state store per shuffle partition per micro-batch, so a tiny
-    local drive at the session's 32 burns seconds of pure store
-    setup/commit. Pass None to keep the session value (real
-    deployments size it to the key cardinality). Further confs to pin
-    for the query only (timezone, trigger flags) go in
-    ``scoped_conf``."""
+    drains can never drop anything as late). Confs to pin for the
+    query only (timezone, trigger flags) go in ``scoped_conf``."""
     stream = (
         spark.readStream.schema(schema).format("parquet").load(source_dir)
     )
-    out = transform(stream)
-    conf = dict(scoped_conf or {})
-    if state_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
     return drive_stream_to_memory(
-        spark, out, query_name, output_mode, feeds=feeds, scoped_conf=conf
+        spark, transform(stream), query_name, output_mode, feeds=feeds,
+        scoped_conf=scoped_conf,
     )
 
 

@@ -47,7 +47,9 @@ def main():
     import __spark_entry__ as entrymod
     from batch_process_spark.session import get_spark
 
-    spark = get_spark("selfcheck")
+    # the tier-1 fixture's driver size: the 48g default lets the heap
+    # grow past 9 GB RSS over a full sweep whose live heap is < 1 GB
+    spark = get_spark("selfcheck", extra_conf={"spark.driver.memory": "4g"})
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -110,12 +110,7 @@ def test_invalidate_tables_releases_the_ranking_pins(spark):
 
 
 # --- structure guard -------------------------------------------------------
-
-# mkdtemp prefixes allowed outside caching.py: none of these dirs holds
-# a table snapshot. ``stream_`` holds a symlink to the table file
-# (queries_ext3); q153's feed pair is wiped on every call.
-_NON_SNAPSHOT_PREFIXES = {"stream_", "q153_imp_", "q153_clk_"}
-
+# (staged temp dirs and their exit hooks: tests/test_scripts.py)
 
 def _modules():
     for path in sorted(PKG.rglob("*.py")):
@@ -130,30 +125,14 @@ def _callee(node: ast.Call) -> str | None:
     return f.attr if isinstance(f, ast.Attribute) else None
 
 
-def _static_prefix(node: ast.Call) -> str:
-    """The literal text a mkdtemp ``prefix=`` starts with."""
-    for kw in node.keywords:
-        if kw.arg == "prefix":
-            v = kw.value
-            if isinstance(v, ast.JoinedStr):
-                v = v.values[0] if v.values else ast.Constant("")
-            if isinstance(v, ast.Constant) and isinstance(v.value, str):
-                return v.value
-    return ""
-
-
 def test_caches_that_snapshot_a_table_live_only_in_caching():
-    memos, releases, temp_dirs = [], [], []
+    memos, releases = [], []
     for rel, tree in _modules():
         for node in ast.walk(tree):
             if isinstance(node, ast.Call) and _callee(node) == "PersistMemo":
                 memos.append(f"{rel}:{node.lineno}")
-            if isinstance(node, ast.Call) and _callee(node) == "mkdtemp":
-                if _static_prefix(node) not in _NON_SNAPSHOT_PREFIXES:
-                    temp_dirs.append(f"{rel}:{node.lineno}")
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 if node.name.startswith("release_"):
                     releases.append(f"{rel}:{node.lineno} {node.name}")
     assert not memos, f"PersistMemo built outside caching.py: {memos}"
     assert not releases, f"release_* defined outside caching.py: {releases}"
-    assert not temp_dirs, f"staged dirs made outside caching.py: {temp_dirs}"

@@ -134,7 +134,7 @@ def test_append_feed_roundtrip(spark):
 
 
 def test_q100_shuffle_partitions_restored(spark):
-    """The scoped state_partitions override must not leak into the
+    """The scoped STATE_PARTITIONS pin must not leak into the
     session after the streaming query finishes."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
     rows = QUERIES["q100_stream_stream_join"](spark, "/root/testdata/sf0.001").collect()

@@ -259,11 +259,10 @@ def test_q134_state_carries_across_batches(spark):
     rather than recomputing per batch."""
     import os
 
-    from batch_process_spark.queries_ext3 import _events_stream_schema
     from batch_process_spark.operators.caching import _STAGED_DIRS
-    from batch_process_spark.queries_ext8 import _staged_event_slices
+    from batch_process_spark.queries import _events_stream
     from batch_process_spark.streaming.stateful import running_totals_cents_stream
-    from batch_process_spark.streaming.windows import run_stream_to_memory
+    from batch_process_spark.streaming.windows import drive_stream_to_memory
 
     import shutil
 
@@ -271,11 +270,9 @@ def test_q134_state_carries_across_batches(spark):
     stale = _STAGED_DIRS.pop((os.path.abspath(SF), "t134_fresh_slices_"), None)
     if stale:  # don't orphan the previous run's staged copy in /tmp
         shutil.rmtree(stale, ignore_errors=True)
-    d, ws = _staged_event_slices(SF, "t134_fresh")
-    out = run_stream_to_memory(
-        spark, d, _events_stream_schema(SF), running_totals_cents_stream,
-        query_name="t134_out", output_mode="update",
-        feeds=[lambda: ws(1), lambda: ws(2)],
+    stream, feeds = _events_stream(spark, SF, "t134_fresh", n_slices=3)
+    out = drive_stream_to_memory(
+        spark, running_totals_cents_stream(stream), "t134_out", "update", feeds=feeds,
     )
     rows = out.collect()
     users = {r["user_id"] for r in rows}
@@ -384,9 +381,10 @@ def test_release_all_clears_staged_event_dirs(spark):
     import os
 
     from batch_process_spark.operators.caching import _STAGED_DIRS, release_all
-    from batch_process_spark.queries_ext8 import _staged_event_slices
+    from batch_process_spark.queries import _events_stream
 
-    d, _ = _staged_event_slices(SF, "t_release_probe")
+    _events_stream(spark, SF, "t_release_probe", n_slices=3)
+    d = _STAGED_DIRS[(os.path.abspath(SF), "t_release_probe_slices_")]
     assert os.path.isdir(d)
     release_all()
     assert not _STAGED_DIRS, "staged-dir memo survived release"

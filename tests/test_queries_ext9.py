@@ -386,6 +386,26 @@ def test_q152_bm25_matches_python_recompute(spark):
     assert [(s, d) for s, d in want_top] == got
 
 
+def test_q153_feed_dirs_removed_after_the_stream_stops(spark):
+    """q153 stages its literal feeds in temp dirs that are gone once it
+    returns, as q99/q100's are: the result is the memory-sink table.
+    Runs the unwrapped builder, so a plan-cache hit cannot skip the
+    stream."""
+    import os
+    import tempfile
+
+    from batch_process_spark.queries import QUERIES
+
+    def feed_dirs():
+        return {e for e in os.listdir(tempfile.gettempdir())
+                if e.startswith(("q153_imp_", "q153_clk_"))}
+
+    before = feed_dirs()
+    out = QUERIES["q153_stream_outer_join"].__wrapped__(spark, SF)
+    assert feed_dirs() <= before
+    assert {r["ad_id"] for r in out.collect()} == {1, 2, 3}
+
+
 def test_q153_outer_row_emitted_with_nulls(spark):
     """The unclicked impression (ad 2) must appear exactly once with
     NULL click columns — the state-eviction outer emission — and the

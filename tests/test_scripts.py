@@ -2,7 +2,9 @@
 ``from scripts.X import Y`` must resolve, every ``scripts/<name>.py``
 path that the package, the tests or the docs cite must exist, and a
 script puts its own checkout on ``sys.path``. Also the reuse rule of
-the span volume fixture."""
+the span volume fixture, and the stream queries' one-place rules: temp
+dirs and exit hooks only in ``operators/caching.py``, session confs
+pinned only by ``queries._q``."""
 
 import ast
 import json
@@ -88,6 +90,39 @@ def test_scripts_put_no_literal_absolute_path_on_sys_path():
         for arg in node.args
         for c in ast.walk(arg)
         if isinstance(c, ast.Constant) and isinstance(c.value, str) and c.value.startswith("/")
+    ]
+    assert bad == []
+
+
+PKG = ROOT / "batch_process_spark"
+
+
+def _calls(path: Path):
+    """(line, dotted callee name) for every call in ``path``, such as
+    ``tempfile.mkdtemp`` or ``atexit.register``."""
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Call):
+            f, parts = node.func, []
+            while isinstance(f, ast.Attribute):
+                parts.append(f.attr)
+                f = f.value
+            if isinstance(f, ast.Name):
+                parts.append(f.id)
+            yield node.lineno, ".".join(reversed(parts))
+
+
+def test_temp_dirs_exit_hooks_and_conf_pins_have_one_home():
+    """Staged temp dirs and their exit hooks live in the one session
+    cache (``caching.staged_slices``, released by ``release_all``), and
+    the catalog's session confs are pinned by ``_q`` on a plan-cache
+    miss, never by a query module."""
+    caching = PKG / "operators" / "caching.py"
+    bad = [
+        f"{path.relative_to(ROOT)}:{line}: {callee}"
+        for path in sorted(PKG.rglob("*.py"))
+        for line, callee in _calls(path)
+        if (path != caching and callee.endswith(("mkdtemp", "atexit.register")))
+        or (path.name.startswith("queries_ext") and callee.endswith("_pin_session_confs"))
     ]
     assert bad == []
 

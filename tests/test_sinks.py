@@ -378,91 +378,6 @@ def test_bucketed_join_plans_with_zero_exchanges(spark):
         spark.sql(f"DROP TABLE IF EXISTS {t_l}")
 
 
-def test_zorder_value_interleaves_bits(spark):
-    from batch_process_spark.sinks.writers import zorder_value
-    from pyspark.sql import functions as F
-
-    df = spark.range(1).select(
-        zorder_value(F.lit(0b101), F.lit(0b011)).alias("z")
-    )
-    # a=101 -> even bits 1_0_1; b=011 -> odd bits _0_1_1 => 0b010111 +
-    # a bit 2 at pos 4 => 0b10111? compute directly:
-    a, b = 0b101, 0b011
-    expect = 0
-    for i in range(3):
-        expect |= ((a >> i) & 1) << (2 * i)
-        expect |= ((b >> i) & 1) << (2 * i + 1)
-    assert df.collect()[0]["z"] == expect
-
-
-def test_write_zordered_tightens_both_column_footers(spark, tmp_path):
-    """The data-skipping claim, measured from real parquet footers: for
-    a box filter on BOTH dimensions, the z-ordered layout must allow
-    pruning strictly more files than a single-column sort layout (which
-    has a tight box on one dim and the FULL range on the other)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from batch_process_spark.sinks.writers import write_zordered
-
-    n, side = 65536, 256  # 256x256 grid, one point per cell
-    df = spark.range(n).select(
-        (F.col("id") % side).alias("xx"), (F.col("id") / side).cast("long").alias("yy")
-    )
-    zdir, sdir = str(tmp_path / "z"), str(tmp_path / "s")
-    write_zordered(df, zdir, "xx", "yy", n_files=16)
-    df.repartitionByRange(16, "xx").sortWithinPartitions("xx").write.parquet(sdir)
-
-    def overlapping(d, box):
-        import glob as g
-        hits = 0
-        for f in g.glob(f"{d}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            o = False
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                stats = {row.column(i).path_in_schema: row.column(i).statistics
-                         for i in range(row.num_columns)}
-                if all(stats[c].min <= hi and stats[c].max >= lo
-                       for c, (lo, hi) in box.items()):
-                    o = True
-            hits += o
-        return hits
-
-    # corner box (selective in both dims): z confines it to few files
-    corner = {"xx": (0, 31), "yy": (0, 31)}
-    assert overlapping(zdir, corner) <= 4  # 1/64 of the area, 16 files
-    # yy band (full xx range): the xx-sort layout can prune NOTHING —
-    # every file spans all yy — while z still skips most files; this is
-    # the multi-dimensional claim
-    band = {"xx": (0, 255), "yy": (0, 31)}
-    z_hits = overlapping(zdir, band)
-    s_hits = overlapping(sdir, band)
-    assert s_hits == 16  # single-column sort: no skipping on yy
-    assert z_hits < s_hits / 2
-
-
-def test_write_zordered_rejects_negative(spark, tmp_path):
-    import pytest as _pytest
-    from batch_process_spark.sinks.writers import write_zordered
-
-    df = spark.createDataFrame([(1, -2)], "a long, b long")
-    with _pytest.raises(Exception, match="outside"):
-        write_zordered(df, str(tmp_path / "neg"), "a", "b")
-
-
-def test_write_zordered_rejects_over_31_bits(spark, tmp_path):
-    """Values >= 2^31 would spread into the sign bit (bit 31 -> 62,
-    odd-operand shift -> 63), silently breaking the Morton order; the
-    fail-loud contract covers the upper bound too."""
-    import pytest as _pytest
-    from batch_process_spark.sinks.writers import write_zordered
-
-    df = spark.createDataFrame([(2**31, 2)], "a long, b long")
-    with _pytest.raises(Exception, match="outside"):
-        write_zordered(df, str(tmp_path / "big"), "a", "b")
-
-
 def test_bucketed_lsh_index_join_no_static_side_exchange(spark):
     """The BASELINE §5k fix wired: against the band_key-bucketed index
     the near-dup probe join shuffles ONLY the incoming-batch side —

@@ -111,44 +111,41 @@ def test_tws_variant_gated_or_equivalent(spark, tmp_path):
 
 def test_drive_raises_when_stream_dies_mid_run(spark, tmp_path):
     """A stream that DIES on a later micro-batch must surface its
-    error from drive_stream_to_memory, not hand back the previous
-    batch's complete-mode table as if it were the final answer —
-    processAllAvailable() on a terminated query returns immediately,
-    so without the q.exception() check the caller reads a stale
-    PARTIAL result (the q196-at-load failure shape)."""
+    error from the shared drive loop (``windows.drive_query``), not
+    hand back the previous batch's output as if it were the final
+    answer — processAllAvailable() on a terminated query returns
+    immediately, so without the q.exception() check the caller reads a
+    stale PARTIAL result (the q196-at-load failure shape). Two inputs:
+    a memory-sink aggregation whose executor raises on the fed batch,
+    and a foreachBatch serving stream (the q172/q214 shape) whose
+    scorer raises on it. Either way no query is left running."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.base import PySparkException
 
-    from batch_process_spark.streaming.windows import run_stream_to_memory
+    from batch_process_spark.streaming.similarity import stream_topk_serving
+    from batch_process_spark.streaming.windows import drive_query, run_stream_to_memory
 
-    src = tmp_path / "dying_src"
-    src.mkdir()
     schema = "v long"
 
-    def write_slice(rows, name):
-        spark.createDataFrame([(r,) for r in rows], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
+    def slice_writer(src):
+        def write_slice(rows):
+            spark.createDataFrame([(r,) for r in rows], schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(src))
 
-    write_slice([1, 2, 3], "s0")
+        return write_slice
 
-    def transform(stream):
-        # the poison rides INSIDE the aggregate (a bare asserted
-        # column would be pruned away): a negative v raises on the
-        # executor, so batch 0 is clean and the fed batch kills the
-        # query
-        poisoned = F.when(
-            F.col("v") < 0, F.raise_error(F.lit("poison row")).cast("long")
-        ).otherwise(F.col("v"))
-        return stream.groupBy().agg(F.sum(poisoned).alias("n"))
+    def memory_sink(src, write_slice):
+        def transform(stream):
+            # the poison rides INSIDE the aggregate (a bare asserted
+            # column would be pruned away): a negative v raises on the
+            # executor, so batch 0 is clean and the fed batch kills the
+            # query
+            poisoned = F.when(
+                F.col("v") < 0, F.raise_error(F.lit("poison row")).cast("long")
+            ).otherwise(F.col("v"))
+            return stream.groupBy().agg(F.sum(poisoned).alias("n"))
 
-    # Narrow raise set (NOT bare Exception — a fixture/setup error must
-    # FAIL this test, not satisfy it) and the surfaced error must be
-    # the executor's poison, proving the killed query's exception
-    # propagated rather than some unrelated failure.
-    from pyspark.errors.exceptions.base import StreamingQueryException
-
-    with pytest.raises((StreamingQueryException, PySparkException, Py4JJavaError)) as exc:
         run_stream_to_memory(
             spark,
             str(src),
@@ -156,9 +153,39 @@ def test_drive_raises_when_stream_dies_mid_run(spark, tmp_path):
             transform,
             query_name="dying_out",
             output_mode="complete",
-            feeds=[lambda: write_slice([-1], "s1")],
+            feeds=[lambda: write_slice([-1])],
         )
-    assert "poison" in str(exc.value), (
-        "the stream's own failure must surface, not a stale partial "
-        f"result or an unrelated error: {exc.value}"
-    )
+
+    def serving(src, write_slice):
+        answered = []
+
+        def scorer(corpus, batch_df, **_):
+            if batch_df.filter(F.col("v") < 0).limit(1).count():
+                raise ValueError("poison query")
+            return batch_df
+
+        stream = spark.readStream.schema(schema).parquet(str(src))
+        q = stream_topk_serving(
+            stream, spark.range(1), lambda df, _: answered.extend(df.collect()),
+            scorer=scorer,
+        )
+        drive_query(q, [lambda: write_slice([-1])])
+
+    # Narrow raise set (NOT bare Exception — a fixture/setup error must
+    # FAIL this test, not satisfy it) and the surfaced error must be
+    # the poison, proving the killed query's exception propagated
+    # rather than some unrelated failure.
+    from pyspark.errors.exceptions.base import StreamingQueryException
+
+    for run in (memory_sink, serving):
+        src = tmp_path / f"dying_src_{run.__name__}"
+        src.mkdir()
+        write_slice = slice_writer(src)
+        write_slice([1, 2, 3])
+        with pytest.raises((StreamingQueryException, PySparkException, Py4JJavaError)) as exc:
+            run(src, write_slice)
+        assert "poison" in str(exc.value), (
+            f"{run.__name__}: the stream's own failure must surface, not a "
+            f"stale partial result or an unrelated error: {exc.value}"
+        )
+        assert spark.streams.active == [], f"{run.__name__}: query left running"
