@@ -598,26 +598,8 @@ def ivfpq_write(
     it from the stats (codes row ≈ id + m longs); the recluster path
     passes an explicit plan from the old index's measured density;
     ``None`` keeps the raw map-output layout."""
-    from batch_process_spark.operators.similarity import (
-        _compacted_cells,
-        cell_file_plan,
-        write_index_meta,
-    )
+    from batch_process_spark.operators.similarity import _write_cells
 
-    if file_plan == "auto":
-        if stats is not None and id_col in assigned_codes.columns:
-            dim = len(centroids[0]) if centroids else subdim
-            m = max(dim // max(subdim, 1), 1)
-            est = (16 + 8 * m) * 1.1  # codes are array<long>, m entries
-            file_plan = cell_file_plan(stats, est, target_file_mb)
-        else:
-            file_plan = None
-    out = (
-        _compacted_cells(assigned_codes, file_plan, id_col)
-        if file_plan
-        else assigned_codes
-    )
-    out.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
     cb_rows = [
         [int(r["sub"]), int(r["cid"]), int(r["spos"]), float(r["c"])]
         for r in codebook.collect()  # bounded: m x k x subdim rows
@@ -627,13 +609,19 @@ def ivfpq_write(
         "pq": {"subdim": int(subdim), "codebook": cb_rows},
     }
     if stats is not None:
-        meta["stats"] = {
-            "cell_sizes": {str(k): v for k, v in stats["cell_sizes"].items()},
-            "n_vectors": stats["n_vectors"],
-            "mean_cell_size": stats["mean_cell_size"],
-            "mean_within_dist": stats["mean_within_dist"],
-        }
-    write_index_meta(assigned_codes.sparkSession, path, meta)
+        meta["stats"] = stats
+    dim = len(centroids[0]) if centroids else subdim
+    m = max(dim // max(subdim, 1), 1)  # codes are array<long>, m entries
+    _write_cells(assigned_codes, path, meta, m, file_plan, id_col, target_file_mb)
+
+
+def codebook_frame(spark, meta: dict) -> DataFrame:
+    """The codebook stored in an IVFPQ index's meta as a frame with the
+    ``pq_train`` schema (sub, cid, spos, c)."""
+    return spark.createDataFrame(
+        [tuple(r) for r in meta["pq"]["codebook"]],
+        "sub int, cid int, spos int, c double",
+    )
 
 
 def ivfpq_read(spark, path: str):
@@ -656,106 +644,13 @@ def ivfpq_read(spark, path: str):
             f"index at {path!r} has no PQ metadata — it was written by "
             "ivf_write, not ivfpq_write; use ivf_read_index instead"
         )
-    cb = spark.createDataFrame(
-        [tuple(r) for r in meta["pq"]["codebook"]],
-        "sub int, cid int, spos int, c double",
-    )
     return (
         spark.read.parquet(path),
         meta["centroids"],
-        cb,
+        codebook_frame(spark, meta),
         meta["pq"]["subdim"],
         meta.get("stats"),
     )
-
-
-def ivfpq_append(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Incrementally grow a stored IVFPQ index (``ivfpq_write``
-    layout): assign arriving FLOAT vectors to the existing coarse
-    centroids (`similarity.ivf_assign` — no refit), encode them with
-    the PERSISTED codebook (map-only fused kernel — no retrain),
-    append the (id, codes, centroid_id) rows under the partitioned
-    layout, and exactly merge the auto-nprobe stats. Returns the
-    appended codes increment.
-
-    The codebook staying fixed is the standard FAISS add() contract:
-    quantization error for the new vectors is whatever the existing
-    codebook gives them; re-training is an offline rebuild decision.
-
-    Commit protocol: stage-then-swap, identical to ``ivf_append`` —
-    the codes batch lands in a ``_``-prefixed staging dir, the merged
-    stats commit via the version-checked meta write, and only then do
-    the staged files rename into the live cells. A tripped
-    ``ConcurrentIndexMutation`` leaves the index byte-identical to its
-    pre-append state and the retry is duplicate-free."""
-    import uuid
-
-    from batch_process_spark.operators.similarity import (
-        APPEND_STAGE_PREFIX,
-        ConcurrentIndexMutation,
-        _move_staged_cells,
-        ivf_assign,
-        ivf_index_stats,
-        merge_index_stats,
-        read_index_meta,
-        recover_pending_append,
-        write_index_meta,
-    )
-    from batch_process_spark.sinks.hadoopfs import HadoopFS
-
-    base = path.rstrip("/")
-    meta = read_index_meta(spark, base)
-    if "pq" not in meta:
-        raise ValueError(
-            f"index at {path!r} has no PQ metadata — use ivf_append for "
-            "a plain IVF float index"
-        )
-    meta = recover_pending_append(spark, base, meta)
-    expected = int(meta.get("version", 0))
-    cents = meta["centroids"]
-    subdim = meta["pq"]["subdim"]
-    cb = spark.createDataFrame(
-        [tuple(r) for r in meta["pq"]["codebook"]],
-        "sub int, cid int, spos int, c double",
-    )
-    assigned = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col)
-    codes = pq_encode_fused(new_vectors, cb, subdim, id_col=id_col, vec_col=vec_col)
-    inc = assigned.select(id_col, "centroid_id").join(codes, id_col)
-
-    fs = HadoopFS(spark, base)
-    stage_name = APPEND_STAGE_PREFIX + uuid.uuid4().hex[:12]
-    stage = f"{base}/{stage_name}"
-    # one file per touched cell per batch (see ivf_append) — fewer
-    # rename-ins now, less compaction debt later
-    inc.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(stage)
-    if meta.get("stats") is not None:
-        # stats need the float coordinates — the staged codes rows
-        # don't carry them, so the delta computes from the assignment
-        delta = ivf_index_stats(assigned, cents, vec_col=vec_col)
-        merged = merge_index_stats(meta["stats"], delta)
-        meta["stats"] = {
-            "cell_sizes": {str(k): v for k, v in merged["cell_sizes"].items()},
-            "n_vectors": merged["n_vectors"],
-            "mean_cell_size": merged["mean_cell_size"],
-            "mean_within_dist": merged["mean_within_dist"],
-        }
-    meta["pending_append"] = stage_name
-    try:
-        write_index_meta(spark, base, meta, expected_version=expected)
-    except ConcurrentIndexMutation:
-        fs.delete(stage)  # index untouched — retry is safe
-        raise
-    _move_staged_cells(fs, stage, base)
-    fs.delete(stage)
-    return inc
 
 
 def ivfpq_topk(
@@ -797,8 +692,8 @@ def ivfpq_topk(
         raise ValueError(
             "ivfpq_topk(nprobe='auto') needs stats=ivf_index_stats(...) "
             "computed on the float assignment at index-build time — or "
-            "loaded from a stored index via similarity.ivf_read_index "
-            "(ivf_write persists them under path/_ivf_meta)"
+            "loaded from a stored index via ivfpq_read (ivfpq_write "
+            "persists them under path/_ivf_meta)"
         )
     probes = ivf_probe_sets(
         centroids,
@@ -891,7 +786,7 @@ def make_stored_ivfpq_scorer(
     """Serving scorer bound to a STORED IVFPQ index path (the
     ``similarity.make_stored_ivf_scorer`` twin): every call re-reads
     the meta (centroids + stats + codebook, one tiny text file) and
-    the partitioned codes scan, so ``ivfpq_append`` / ``ivf_delete`` /
+    the partitioned codes scan, so ``ivf_append`` / ``ivf_delete`` /
     ``ivf_recluster`` / ``compact_index`` land in the NEXT micro-batch
     without restarting the stream. The exact rerank still runs against
     the ``corpus`` frame the serving loop passes — the float source of

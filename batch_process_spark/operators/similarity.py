@@ -699,6 +699,36 @@ def _compacted_cells(df: DataFrame, file_plan: dict[int, int], id_col: str) -> D
     )
 
 
+def _write_cells(
+    df: DataFrame,
+    path: str,
+    meta: dict | None,
+    width: int,
+    file_plan: dict[int, int] | str | None,
+    id_col: str,
+    target_file_mb: int,
+) -> None:
+    """The one cell writer behind ``ivf_write`` and ``pq.ivfpq_write``:
+    rows written ``partitionBy("centroid_id")``, then ``meta`` (None
+    for a meta-less index) through ``write_index_meta``. ``width`` is
+    the per-row payload in 8-byte elements (``dim`` doubles for a float
+    index, ``m`` longs for a codes index); ``file_plan="auto"`` sizes
+    the cells from it and ``meta["stats"]``, and falls back to the raw
+    map-output layout when there are no stats to size from."""
+    stats = meta.get("stats") if meta is not None else None
+    if file_plan == "auto":
+        if stats is not None and id_col in df.columns:
+            # estimated parquet bytes/row: id + width 8-byte elements
+            # (random floats compress ~not at all) + ~10% structure
+            file_plan = cell_file_plan(stats, (16 + 8 * width) * 1.1, target_file_mb)
+        else:
+            file_plan = None
+    out = _compacted_cells(df, file_plan, id_col) if file_plan else df
+    out.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    if meta is not None:
+        write_index_meta(df.sparkSession, path, meta)
+
+
 def ivf_write(
     assigned: DataFrame,
     path: str,
@@ -735,35 +765,15 @@ def ivf_write(
     ``compact_index`` rewrite. Pass ``file_plan=None`` for the raw
     map-output layout (no shuffle), or an explicit dict (the recluster
     path passes one computed from the OLD index's measured density)."""
-    if centroids is not None and stats is None:
-        stats = ivf_index_stats(assigned, centroids, vec_col=vec_col)
-    if file_plan == "auto":
-        # centroids gate mirrors pq.ivfpq_write: stats may be passed
-        # without centroids (a no-meta write), and the density estimate
-        # needs the vector dimension from centroids[0]
-        if stats is not None and centroids is not None and id_col in assigned.columns:
-            # estimated parquet bytes/vec: id + dim doubles (random
-            # floats compress ~not at all) + ~10% structure overhead
-            est = (16 + 8 * len(centroids[0])) * 1.1
-            file_plan = cell_file_plan(stats, est, target_file_mb)
-        else:
-            file_plan = None
-    out = _compacted_cells(assigned, file_plan, id_col) if file_plan else assigned
-    out.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    meta = None
     if centroids is not None:
-        import json
-
-        meta = {
-            "centroids": [[float(x) for x in c] for c in centroids],
-            "stats": {
-                # JSON keys are strings; ivf_read_index restores ints
-                "cell_sizes": {str(k): v for k, v in stats["cell_sizes"].items()},
-                "n_vectors": stats["n_vectors"],
-                "mean_cell_size": stats["mean_cell_size"],
-                "mean_within_dist": stats["mean_within_dist"],
-            },
-        }
-        write_index_meta(assigned.sparkSession, path, meta)
+        if stats is None:
+            stats = ivf_index_stats(assigned, centroids, vec_col=vec_col)
+        meta = {"centroids": [[float(x) for x in c] for c in centroids], "stats": stats}
+    _write_cells(
+        assigned, path, meta, len(centroids[0]) if centroids else 0,
+        file_plan, id_col, target_file_mb,
+    )
 
 
 class ConcurrentIndexMutation(RuntimeError):
@@ -781,10 +791,12 @@ def write_index_meta(spark, path: str, meta: dict,
     ``path/_ivf_meta`` — through the Hadoop FS stream API (driver-side,
     no Spark job), so it lands on whatever Hadoop filesystem the index
     lives on; the ``_`` prefix keeps it invisible to
-    ``spark.read.parquet(path)``. Shared by ``ivf_write`` and
-    ``pq.ivfpq_write`` (which adds the codebook).
+    ``spark.read.parquet(path)``. The one meta codec of both index
+    kinds (``pq.ivfpq_write`` adds the codebook): ``meta["stats"]`` is
+    an ``ivf_index_stats`` dict whose int ``cell_sizes`` keys are
+    stringified here for JSON and restored by ``read_index_meta``.
 
-    Concurrency contract: index mutation (``ivf_write`` / ``*_append``
+    Concurrency contract: index mutation (``ivf_write`` / ``ivf_append``
     / ``ivf_delete`` / ``ivf_recluster``) is SINGLE-WRITER — appends
     read-modify-write the stats, so two concurrent writers lose one
     update. Violations get BEST-EFFORT DETECTION at commit: every
@@ -832,12 +844,16 @@ def write_index_meta(spark, path: str, meta: dict,
             "stats update NOT applied, re-read the index and retry"
         )
     meta["version"] = max(stored, int(meta.get("version", 0))) + 1
+    stats, doc = meta.get("stats"), meta
+    if stats is not None:  # JSON keys are strings; read_index_meta restores ints
+        sizes = {str(k): v for k, v in stats["cell_sizes"].items()}
+        doc = {**meta, "stats": {**stats, "cell_sizes": sizes}}
     # direct FS stream write — the meta is ~1 kB of JSON; a Spark job
     # (createDataFrame + write.text) cost ~2 s of pure overhead on
     # EVERY lifecycle commit (phase-probed r12). The stored form is now
     # a plain file; read_utf8 still reads the legacy part-file dirs.
     tmp = f"{base}/_ivf_meta_tmp_{uuid.uuid4().hex[:12]}"
-    fs.write_utf8(tmp, json.dumps(meta))
+    fs.write_utf8(tmp, json.dumps(doc))
     fs.delete(old)  # clear a stale aside from an earlier completed write
     if fs.exists(final):
         fs.rename(final, old)  # prior meta stays recoverable, never deleted
@@ -888,10 +904,15 @@ def ivf_read_index(spark, path: str):
     index with persisted metadata. The assigned frame is the lazy
     partitioned scan (probe filters land in PartitionFilters); the
     metadata load reads ONE tiny text file — no corpus I/O — so
-    ``ivf_topk(..., nprobe="auto", stats=stats)`` and
-    ``ivfpq_topk(..., nprobe="auto", stats=stats)`` run off the stored
-    index alone."""
+    ``ivf_topk(..., nprobe="auto", stats=stats)`` runs off the stored
+    index alone. An IVFPQ codes index is refused: its frame holds codes,
+    not the float vectors ``ivf_topk`` scores."""
     meta = read_index_meta(spark, path)
+    if "pq" in meta:
+        raise ValueError(
+            f"index at {path!r} is an IVFPQ codes index — it was written "
+            "by ivfpq_write, not ivf_write; use pq.ivfpq_read instead"
+        )
     return spark.read.parquet(path), meta["centroids"], meta["stats"]
 
 
@@ -999,7 +1020,7 @@ def _move_staged_cells(fs, stage: str, base: str) -> int:
 
 
 def recover_pending_append(spark, path: str, meta: dict) -> dict:
-    """Roll a crashed staged append forward. ``*_append`` commits in
+    """Roll a crashed staged append forward. ``ivf_append`` commits in
     two steps: (1) CAS meta write carrying ``pending_append`` (the
     staged batch's dir name) with the already-merged stats, (2) rename
     the staged files into the live cells. A crash between them leaves
@@ -1038,12 +1059,21 @@ def ivf_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Incrementally grow a stored IVF index: assign the arriving
-    vectors to the EXISTING centroids (``ivf_assign`` — no refit, the
-    cells stay stable so previously-served probe sets remain valid),
-    append them under the partitioned layout (only the touched cells'
-    directories gain files), and merge the persisted auto-nprobe stats
-    exactly (``merge_index_stats``). Returns the assigned increment.
+    """Incrementally grow a stored IVF or IVFPQ index: assign the
+    arriving float vectors to the EXISTING centroids (``ivf_assign`` —
+    no refit, the cells stay stable so previously-served probe sets
+    remain valid), append them under the partitioned layout (only the
+    touched cells' directories gain files), and merge the persisted
+    auto-nprobe stats exactly (``merge_index_stats``). Returns the
+    staged increment of the index's kind: (id, embedding, centroid_id)
+    for a float index, (id, centroid_id, codes) for a codes index.
+
+    The kind comes from the stored meta. A codes index encodes the batch
+    with the PERSISTED codebook (``pq.pq_encode_fused`` — no retrain,
+    the FAISS add() contract: quantization error for the new vectors is
+    whatever the existing codebook gives them), and its stats delta
+    comes from the float assignment, since the staged codes rows carry
+    no float coordinates.
 
     At 100 TB this is the ingest path: per batch, one map-only assign
     + one partitioned append + one n_centroids-row stats job; the
@@ -1067,16 +1097,19 @@ def ivf_append(
     from batch_process_spark.sinks.hadoopfs import HadoopFS
 
     base = path.rstrip("/")
-    meta = read_index_meta(spark, base)
-    if "pq" in meta:
-        raise ValueError(
-            f"index at {path!r} is an IVFPQ codes index — float vectors "
-            "cannot be appended to it; use pq.ivfpq_append"
-        )
-    meta = recover_pending_append(spark, base, meta)
+    meta = recover_pending_append(spark, base, read_index_meta(spark, base))
     expected = int(meta.get("version", 0))
     cents = meta["centroids"]
     assigned = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col)
+    inc = assigned
+    if "pq" in meta:
+        from batch_process_spark.operators import pq
+
+        codes = pq.pq_encode_fused(
+            new_vectors, pq.codebook_frame(spark, meta), meta["pq"]["subdim"],
+            id_col=id_col, vec_col=vec_col,
+        )
+        inc = assigned.select(id_col, "centroid_id").join(codes, id_col)
 
     fs = HadoopFS(spark, base)
     stage_name = APPEND_STAGE_PREFIX + uuid.uuid4().hex[:12]
@@ -1085,20 +1118,15 @@ def ivf_append(
     # batch instead of (batch partitions x cells) small files — a
     # batch-sized shuffle that cuts both the rename-in count and the
     # append debt compact_index exists to repay
-    assigned.repartition("centroid_id").write.mode("overwrite").partitionBy(
+    inc.repartition("centroid_id").write.mode("overwrite").partitionBy(
         "centroid_id"
     ).parquet(stage)
-    if "stats" in meta:
-        delta = ivf_index_stats(
-            spark.read.parquet(stage), cents, vec_col=vec_col
-        )
-        merged = merge_index_stats(meta["stats"], delta)
-        meta["stats"] = {
-            "cell_sizes": {str(k): v for k, v in merged["cell_sizes"].items()},
-            "n_vectors": merged["n_vectors"],
-            "mean_cell_size": merged["mean_cell_size"],
-            "mean_within_dist": merged["mean_within_dist"],
-        }
+    if meta.get("stats") is not None:
+        # the delta needs float coordinates: a float batch reads them back
+        # from the staged rows, a codes batch from its assignment
+        staged = assigned if "pq" in meta else spark.read.parquet(stage)
+        delta = ivf_index_stats(staged, cents, vec_col=vec_col)
+        meta["stats"] = merge_index_stats(meta["stats"], delta)
     meta["pending_append"] = stage_name
     try:
         write_index_meta(spark, base, meta, expected_version=expected)
@@ -1107,7 +1135,7 @@ def ivf_append(
         raise
     _move_staged_cells(fs, stage, base)
     fs.delete(stage)
-    return assigned
+    return inc
 
 
 def subtract_index_stats(old: dict, removed: dict) -> dict:
@@ -1171,7 +1199,7 @@ def ivf_delete(
     to the id set finds the touched cells (centroid_id is a partition
     column, so the scan reads the id column only); each touched cell is
     rewritten with an anti-join and swapped in crash-safely
-    (``swap_directory`` — never destructive of the only copy); cells
+    (``swap_directory_fs`` — never destructive of the only copy); cells
     the ids don't touch are never read or written. A cell left empty is
     removed outright, matching a from-scratch rebuild's stats.
 
@@ -1237,16 +1265,7 @@ def ivf_delete(
         rewritten += 1
 
     if meta.get("stats") is not None:
-        merged = subtract_index_stats(
-            {**meta["stats"], "cell_sizes": dict(meta["stats"]["cell_sizes"])},
-            removed_stats,
-        )
-        meta["stats"] = {
-            "cell_sizes": {str(k): v for k, v in merged["cell_sizes"].items()},
-            "n_vectors": merged["n_vectors"],
-            "mean_cell_size": merged["mean_cell_size"],
-            "mean_within_dist": merged["mean_within_dist"],
-        }
+        meta["stats"] = subtract_index_stats(meta["stats"], removed_stats)
         write_index_meta(spark, base, meta, expected_version=expected)
     from batch_process_spark.queries import invalidate_tables
 
@@ -1383,10 +1402,7 @@ def ivf_recluster(
         from batch_process_spark.operators import pq as _pq
 
         subdim = meta["pq"]["subdim"]
-        cb = spark.createDataFrame(
-            [tuple(r) for r in meta["pq"]["codebook"]],
-            "sub int, cid int, spos int, c double",
-        )
+        cb = _pq.codebook_frame(spark, meta)
         assigned, cents = _train_assign(corpus)
         # PQ codes are COARSE-INDEPENDENT (they quantize the vector,
         # not its cell), so a re-cluster reuses the STORED codes and
@@ -1540,9 +1556,9 @@ def compact_index(
     min_files: int = 4,
 ) -> dict:
     """Small-files compaction over a stored index's cell directories:
-    repeated ``ivf_append``/``ivfpq_append`` batches accrete one file
-    set per append per touched cell, and the per-file open/footer cost
-    eventually dominates probe reads. Rewrites each cell directory
+    repeated ``ivf_append`` batches accrete one file set per append
+    per touched cell, and the per-file open/footer cost eventually
+    dominates probe reads. Rewrites each cell directory
     holding >= ``min_files`` parquet files down to ~``target_mb`` files
     (``coalesce`` — no shuffle), swapped in crash-safely per cell.
 

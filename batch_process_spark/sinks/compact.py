@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from batch_process_spark.sinks.swapdir import recover_swap, swap_directory
+from batch_process_spark.sinks.hadoopfs import HadoopFS, recover_swap_fs, swap_directory_fs
 
 
 def parquet_files(path: str) -> list[str]:
@@ -40,7 +40,8 @@ def compact_parquet(
     at scan time).
     """
     tmp = path.rstrip("/") + ".__compact__"
-    recover_swap(path, tmp)  # repair any crashed earlier swap first
+    fs = HadoopFS(spark, path)
+    recover_swap_fs(fs, path, tmp)  # repair any crashed earlier swap first
     files = parquet_files(path)
     total_bytes = sum(os.path.getsize(f) for f in files)
     if len(files) < min_files:
@@ -52,7 +53,7 @@ def compact_parquet(
     else:
         out = df.coalesce(n_out) if n_out < len(files) else df.repartition(n_out)
     out.write.mode("overwrite").parquet(tmp)
-    swap_directory(tmp, path)
+    swap_directory_fs(fs, tmp, path)
     from batch_process_spark.queries import invalidate_tables
 
     invalidate_tables(path)  # cached plans snapshot the old file listing

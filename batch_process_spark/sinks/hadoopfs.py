@@ -1,23 +1,26 @@
-"""Hadoop-FileSystem-API twins of the crash-safe directory swap.
+"""The crash-safe directory swap, over the Hadoop FileSystem API.
 
-``sinks.swapdir`` implements the never-destructive swap protocol with
-``os``/``shutil`` — fine for local paths, wrong for a stored index that
-lives on HDFS/S3 (the 100 TB deployment target the index docstrings
-advertise). The index lifecycle ops (``ivf_delete`` cell rewrites,
-``ivf_recluster`` whole-index swap, ``compact_index``) route their
-listing / size / rename / delete calls through this wrapper instead, so
-they work on whatever filesystem the index path resolves to — exactly
-like ``write_index_meta`` already does for the meta file.
+Every wholesale directory rewrite goes through ``swap_directory_fs``:
+the parquet-lake rewrites (``sinks.compact.compact_parquet``, the CDC
+upsert sink ``streaming.cdc.upsert_batch``) and the stored-index
+lifecycle ops (``ivf_delete`` cell rewrites, the ``ivf_recluster``
+whole-index swap, ``compact_index``). Routing the listing / size /
+rename / delete calls through ``HadoopFS`` makes them work on whatever
+filesystem the path resolves to (HDFS / S3A / local alike), exactly
+like ``write_index_meta`` does for the index meta file.
 
-Protocol (identical to ``swapdir.swap_directory`` — see that module's
-docstring for the crash-window analysis):
+A naive ``delete(path); rename(tmp, path)`` has a destruction window:
+a crash between the two calls leaves the canonical path missing, with
+the data stranded in the temp dir. The swap is never destructive of
+the only copy:
 
     1. rename(path, path + '.__old__')   # canonical data still intact
     2. rename(tmp, path)                 # new data takes the name
     3. delete(path + '.__old__')         # only now is anything deleted
 
-``recover_swap_fs`` rolls a crashed swap forward or back
-deterministically on the next writer startup.
+A crash at any point leaves at least one complete copy, and
+``recover_swap_fs`` (called on the next writer startup) rolls the
+state forward or back deterministically.
 """
 
 from __future__ import annotations
@@ -111,8 +114,8 @@ class HadoopFS:
 
 
 def swap_directory_fs(fs: HadoopFS, tmp: str, path: str) -> None:
-    """``swapdir.swap_directory`` over the Hadoop FS API (single
-    writer; ``path`` need not exist on the first write)."""
+    """Replace ``path`` with ``tmp`` by the three-step swap above
+    (single writer; ``path`` need not exist on the first write)."""
     old = path.rstrip("/") + OLD_SUFFIX
     if fs.exists(old):  # leftover from a crashed earlier swap
         fs.delete(old)
@@ -124,8 +127,16 @@ def swap_directory_fs(fs: HadoopFS, tmp: str, path: str) -> None:
 
 
 def recover_swap_fs(fs: HadoopFS, path: str, tmp: str | None = None) -> str:
-    """``swapdir.recover_swap`` over the Hadoop FS API. Returns
-    'clean' | 'rolled_forward' | 'rolled_back'."""
+    """Repair a crashed swap at writer startup. Returns one of
+    'clean' | 'rolled_forward' | 'rolled_back'.
+
+    States (P = canonical path, O = P.__old__, T = the temp dir):
+      P present, O present  -> swap died after step 2: finish (drop O).
+      P absent,  O present  -> swap died between 1 and 2: if T is
+                               complete, finish the swap; else roll O
+                               back to P.
+      P absent,  T present  -> a first write died before step 2:
+                               promote a complete T."""
     old = path.rstrip("/") + OLD_SUFFIX
     if fs.exists(path):
         if fs.exists(old):

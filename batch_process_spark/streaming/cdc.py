@@ -15,14 +15,13 @@ upsert logic.
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from batch_process_spark.operators.merge import merge_upsert
-from batch_process_spark.sinks.swapdir import recover_swap, swap_directory
+from batch_process_spark.sinks.hadoopfs import HadoopFS, recover_swap_fs, swap_directory_fs
 
 
 def upsert_batch(
@@ -60,13 +59,14 @@ def upsert_batch(
         .drop("__rn")
     )
     tmp = target_dir.rstrip("/") + ".__tmp__"
-    recover_swap(target_dir, tmp)  # repair any crashed earlier swap first
-    if os.path.exists(target_dir):
+    fs = HadoopFS(spark, target_dir)
+    recover_swap_fs(fs, target_dir, tmp)  # repair any crashed earlier swap first
+    if fs.exists(target_dir):
         merged = merge_upsert(spark.read.parquet(target_dir), batch_df, keys)
     else:
         merged = batch_df
     merged.write.mode("overwrite").parquet(tmp)
-    swap_directory(tmp, target_dir)
+    swap_directory_fs(fs, tmp, target_dir)
     from batch_process_spark.queries import invalidate_tables
 
     invalidate_tables(target_dir)  # cached plans snapshot the old file listing

@@ -501,7 +501,7 @@ def test_stored_index_serving_sees_mutations_between_batches(spark, tmp_path):
 
 def test_stored_ivfpq_serving_sees_mutations_between_batches(spark, tmp_path):
     """PQ twin of the stored-index serving lifecycle: batch 1 serves
-    off the initial codes index; ivfpq_append + ivf_delete mutate it
+    off the initial codes index; ivf_append + ivf_delete mutate it
     under the running stream; batch 2 serves the appended id and never
     the deleted one."""
     import pyarrow as pa
@@ -511,6 +511,7 @@ def test_stored_ivfpq_serving_sees_mutations_between_batches(spark, tmp_path):
 
     from batch_process_spark.operators import pq
     from batch_process_spark.operators.similarity import (
+        ivf_append,
         ivf_delete,
         ivf_index_stats,
     )
@@ -569,7 +570,7 @@ def test_stored_ivfpq_serving_sees_mutations_between_batches(spark, tmp_path):
         batch1 = set(answers[1])
         assert batch1 and 9000 not in batch1
 
-        pq.ivfpq_append(spark, path, spark.createDataFrame(
+        ivf_append(spark, path, spark.createDataFrame(
             [(9000, probe)], "vec_id long, embedding array<double>"
         ))
         takedown = min(batch1)

@@ -1,6 +1,5 @@
 """Config save / format / template round-trip (reference parity:
-config/loader.py save_config, format_config_yaml, generate_template)
-and the crash-safe directory swap used by compact/CDC."""
+config/loader.py save_config, format_config_yaml, generate_template)."""
 
 import json
 import os
@@ -17,7 +16,6 @@ from batch_process_spark.plans.config_io import (
     load_config_rt,
     save_config,
 )
-from batch_process_spark.sinks.swapdir import recover_swap, swap_directory
 
 REPO = str(Path(__file__).resolve().parents[1])
 
@@ -94,71 +92,6 @@ def test_template_cli(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert out.exists() and "rules" in r.stdout
-
-
-# ---------------------------------------------------------------------------
-# swapdir: the non-destructive replace window
-# ---------------------------------------------------------------------------
-
-
-def _mkdir_with(p: Path, marker: str, success: bool = True) -> None:
-    p.mkdir(parents=True)
-    (p / "data.txt").write_text(marker)
-    if success:
-        (p / "_SUCCESS").write_text("")
-
-
-def test_swap_replaces_and_cleans(tmp_path):
-    path, tmp = tmp_path / "t", tmp_path / "t.__tmp__"
-    _mkdir_with(path, "old")
-    _mkdir_with(tmp, "new")
-    swap_directory(str(tmp), str(path))
-    assert (path / "data.txt").read_text() == "new"
-    assert not tmp.exists() and not (tmp_path / "t.__old__").exists()
-
-
-def test_swap_first_write_no_target(tmp_path):
-    path, tmp = tmp_path / "t", tmp_path / "t.__tmp__"
-    _mkdir_with(tmp, "new")
-    swap_directory(str(tmp), str(path))
-    assert (path / "data.txt").read_text() == "new"
-
-
-def test_recover_rolls_back_when_tmp_incomplete(tmp_path):
-    # crash between rename(path, old) and rename(tmp, path), tmp has no _SUCCESS
-    path = tmp_path / "t"
-    _mkdir_with(tmp_path / "t.__old__", "old")
-    _mkdir_with(tmp_path / "t.__tmp__", "partial", success=False)
-    state = recover_swap(str(path), str(tmp_path / "t.__tmp__"))
-    assert state == "rolled_back"
-    assert (path / "data.txt").read_text() == "old"
-
-
-def test_recover_rolls_forward_when_tmp_complete(tmp_path):
-    path = tmp_path / "t"
-    _mkdir_with(tmp_path / "t.__old__", "old")
-    _mkdir_with(tmp_path / "t.__tmp__", "new")
-    state = recover_swap(str(path), str(tmp_path / "t.__tmp__"))
-    assert state == "rolled_forward"
-    assert (path / "data.txt").read_text() == "new"
-    assert not (tmp_path / "t.__old__").exists()
-
-
-def test_recover_finishes_interrupted_cleanup(tmp_path):
-    # crash after rename(tmp, path) but before rmtree(old)
-    path = tmp_path / "t"
-    _mkdir_with(path, "new")
-    _mkdir_with(tmp_path / "t.__old__", "old")
-    assert recover_swap(str(path)) == "rolled_forward"
-    assert (path / "data.txt").read_text() == "new"
-    assert not (tmp_path / "t.__old__").exists()
-
-
-def test_recover_clean_noop(tmp_path):
-    path = tmp_path / "t"
-    _mkdir_with(path, "cur")
-    assert recover_swap(str(path)) == "clean"
-    assert (path / "data.txt").read_text() == "cur"
 
 
 def test_invalidate_tables_drops_memo(spark):

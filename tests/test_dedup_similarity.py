@@ -629,21 +629,16 @@ def test_ivf_append_grows_the_stored_index_in_place(spark, tmp_path):
     top = ivf_topk(df, cents2, q, k=1, nprobe="auto", stats=stats2).collect()
     assert top[0]["vec_id"] == 1000  # the appended vector IS the NN of itself
 
-    # wrong-kind guards
-    import pytest
-
-    from batch_process_spark.operators import pq
-
-    with pytest.raises(ValueError, match="no PQ metadata"):
-        pq.ivfpq_append(spark, path, newv)
+    # a float index's increment is the float assignment
+    assert set(inc.columns) == {"vec_id", "embedding", "centroid_id"}
 
 
 def test_ivfpq_append_encodes_with_the_stored_codebook(spark, tmp_path):
-    """IVFPQ incremental ingest: the increment is encoded with the
-    PERSISTED codebook (no retrain), appended partitioned, stats
-    merged; search off the stored index retrieves the appended vector."""
+    """IVFPQ incremental ingest through the one ivf_append: the
+    increment is encoded with the PERSISTED codebook (no retrain),
+    appended partitioned, stats merged; search off the stored index
+    retrieves the appended vector."""
     import numpy as np
-    import pytest
 
     from batch_process_spark.operators import pq
     from batch_process_spark.operators.similarity import ivf_append, ivf_index_stats
@@ -667,7 +662,8 @@ def test_ivfpq_append_encodes_with_the_stored_codebook(spark, tmp_path):
     newv = spark.createDataFrame(
         [(2000, [5.0, 0.2, 0.1, 0.0])], "vec_id long, embedding array<double>"
     )
-    inc = pq.ivfpq_append(spark, path, newv)
+    inc = ivf_append(spark, path, newv)
+    # a codes index's increment is the codes rows
     assert {c for c in inc.columns} == {"vec_id", "centroid_id", "codes"}
     assert inc.count() == 1
 
@@ -685,9 +681,6 @@ def test_ivfpq_append_encodes_with_the_stored_codebook(spark, tmp_path):
         k=1, rerank_factor=5, nprobe="auto", stats=stats2,
     ).collect()
     assert top[0]["vec_id"] == 2000
-
-    with pytest.raises(ValueError, match="IVFPQ codes index"):
-        ivf_append(spark, path, newv)
     corpus.unpersist()
 
 

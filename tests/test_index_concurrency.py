@@ -51,6 +51,22 @@ def _build_index(spark, tmp_path, name="idx"):
     return path
 
 
+def _build_pq_index(spark, tmp_path, name="pqidx"):
+    from batch_process_spark.operators import pq
+    from batch_process_spark.operators.similarity import ivf_index_stats
+
+    corpus = _two_blob_corpus(spark).persist()
+    corpus.count()
+    codes, cents, cb = pq.ivfpq_index(corpus, subdim=2, k_code=4,
+                                      n_centroids=2)
+    floats = corpus.join(codes.select("vec_id", "centroid_id"), "vec_id")
+    path = str(tmp_path / name)
+    pq.ivfpq_write(codes, path, cents, cb, subdim=2,
+                   stats=ivf_index_stats(floats, cents))
+    corpus.unpersist()
+    return path
+
+
 def test_cas_write_rejects_stale_version(spark, tmp_path):
     """Commit-time CAS: a writer holding a version that a concurrent
     mutation has since bumped fails loudly, and the stored meta keeps
@@ -244,9 +260,10 @@ def test_sampled_retrain_matches_full_assign_operator(spark):
 
 
 def test_hadoopfs_swap_recover_states(spark, tmp_path):
-    """sinks.hadoopfs recover_swap_fs rolls a crashed swap forward or
-    back deterministically — same protocol as sinks.swapdir, but over
-    the Hadoop FS API (exercised here via the local Hadoop FS)."""
+    """sinks.hadoopfs swap_directory_fs replaces a directory (or writes
+    it the first time) and recover_swap_fs rolls a crashed swap forward
+    or back deterministically (exercised here via the local Hadoop
+    FS)."""
     from batch_process_spark.sinks.hadoopfs import (
         HadoopFS,
         recover_swap_fs,
@@ -263,8 +280,14 @@ def test_hadoopfs_swap_recover_states(spark, tmp_path):
     base = str(tmp_path / "cell")
     fs = HadoopFS(spark, base)
 
+    # first write: no target yet, the temp simply takes the name
+    t0 = str(tmp_path / "cell.__t0__")
+    mk(t0, "v1")
+    swap_directory_fs(fs, t0, base)
+    assert open(os.path.join(base, "data.parquet")).read() == "v1"
+    assert not os.path.exists(t0)
+
     # happy path: swap replaces contents, aside cleaned up
-    mk(base, "v1")
     tmp = str(tmp_path / "cell.__tmp__")
     mk(tmp, "v2")
     swap_directory_fs(fs, tmp, base)
@@ -370,14 +393,16 @@ def test_tripped_append_leaves_index_byte_identical(spark, tmp_path,
     assert df.select("vec_id").distinct().count() == 39
 
 
+@pytest.mark.parametrize("build", [_build_index, _build_pq_index],
+                         ids=["float", "pq"])
 def test_append_crash_between_cas_and_movein_heals(spark, tmp_path,
-                                                   monkeypatch):
+                                                   monkeypatch, build):
     """Crash window: meta committed (stats + pending_append marker) but
     the staged files never renamed in. Reads stay recall-safe (stats
     over-count, data serves the old state), and the NEXT lifecycle op
     heals it — completes the move, clears the marker — with no
-    duplicate ids."""
-    path = _build_index(spark, tmp_path)
+    duplicate ids. The one append commit serves both index kinds."""
+    path = build(spark, tmp_path)
 
     def crash(fs, stage, base):
         raise RuntimeError("simulated crash after CAS, before move-in")
@@ -399,7 +424,7 @@ def test_append_crash_between_cas_and_movein_heals(spark, tmp_path,
     ivf_append(spark, path, spark.createDataFrame(
         [(701, [-5.3, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
     ))
-    df, _, stats = ivf_read_index(spark, path)
+    df, stats = spark.read.parquet(path), read_index_meta(spark, path)["stats"]
     assert df.count() == 42 and stats["n_vectors"] == 42
     assert df.select("vec_id").distinct().count() == 42
     # marker clearing is lazy: the healing append leaves its OWN marker,
@@ -418,19 +443,11 @@ def test_append_crash_between_cas_and_movein_heals(spark, tmp_path,
 def test_tripped_ivfpq_append_leaves_index_byte_identical(spark, tmp_path,
                                                           monkeypatch):
     """Same stage-then-swap contract for the codes index: a tripped
-    ivfpq_append leaves the stored codes byte-identical and the retry
+    ivf_append leaves the stored codes byte-identical and the retry
     is duplicate-free."""
     from batch_process_spark.operators import pq
-    from batch_process_spark.operators.similarity import ivf_index_stats
 
-    corpus = _two_blob_corpus(spark).persist()
-    corpus.count()
-    codes, cents, cb = pq.ivfpq_index(corpus, subdim=2, k_code=4,
-                                      n_centroids=2)
-    floats = corpus.join(codes.select("vec_id", "centroid_id"), "vec_id")
-    path = str(tmp_path / "pqidx_trip")
-    pq.ivfpq_write(codes, path, cents, cb, subdim=2,
-                   stats=ivf_index_stats(floats, cents))
+    path = _build_pq_index(spark, tmp_path, "pqidx_trip")
     before_files = _cell_listing(path)
     before_stats = read_index_meta(spark, path)["stats"]
     stale = copy.deepcopy(read_index_meta(spark, path))
@@ -448,7 +465,7 @@ def test_tripped_ivfpq_append_leaves_index_byte_identical(spark, tmp_path,
         [(800, [5.0, 0.1, -5.0, 0.1])], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ConcurrentIndexMutation):
-        pq.ivfpq_append(spark, path, new)
+        ivf_append(spark, path, new)
     monkeypatch.setattr(similarity, "read_index_meta", real)
 
     assert _cell_listing(path) == before_files
@@ -456,12 +473,11 @@ def test_tripped_ivfpq_append_leaves_index_byte_identical(spark, tmp_path,
     assert not [d for d in os.listdir(path)
                 if d.startswith(similarity.APPEND_STAGE_PREFIX)]
 
-    inc = pq.ivfpq_append(spark, path, new)
+    inc = ivf_append(spark, path, new)
     assert inc.count() == 1
     codes2, _, _, _, stats2 = pq.ivfpq_read(spark, path)
     assert codes2.count() == 41 and stats2["n_vectors"] == 41
     assert codes2.select("vec_id").distinct().count() == 41
-    corpus.unpersist()
 
 
 def test_kmeans_degenerate_inputs(spark):

@@ -504,6 +504,11 @@ def test_ivfpq_write_read_roundtrip_serves_identically(spark, tmp_path):
     ivf_write(float_assigned, path2, centroids=cents, stats=stats)
     with pytest.raises(ValueError, match="no PQ metadata"):
         pq.ivfpq_read(spark, path2)
+    # ... and a codes index refuses ivf_read_index, naming ivfpq_read
+    from batch_process_spark.operators.similarity import ivf_read_index
+
+    with pytest.raises(ValueError, match="IVFPQ codes index.*ivfpq_read"):
+        ivf_read_index(spark, path)
     emb.unpersist()
 
 

@@ -4,7 +4,8 @@ path that the package, the tests or the docs cite must exist, and a
 script puts its own checkout on ``sys.path``. Also the reuse rule of
 the span volume fixture, and the stream queries' one-place rules: temp
 dirs and exit hooks only in ``operators/caching.py``, session confs
-pinned only by ``queries._q``."""
+pinned only by ``queries._q``. And the stored index's one protocol: one
+meta codec, one codebook decode, one append and one directory swap."""
 
 import ast
 import json
@@ -125,6 +126,51 @@ def test_temp_dirs_exit_hooks_and_conf_pins_have_one_home():
         or (path.name.startswith("queries_ext") and callee.endswith("_pin_session_confs"))
     ]
     assert bad == []
+
+
+def _stored_index_forks(path: Path):
+    """Forks of the stored-index protocol in one module: ``{str(k): v}``
+    stats re-keying outside ``write_index_meta``, a second append
+    (``ivfpq_append``) and imports of the deleted ``sinks.swapdir``."""
+    tree = ast.parse(path.read_text(), str(path))
+    home = [
+        range(f.lineno, f.end_lineno + 1)
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef) and f.name == "write_index_meta"
+    ]
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.DictComp)
+            and isinstance(node.key, ast.Call)
+            and isinstance(node.key.func, ast.Name)
+            and node.key.func.id == "str"
+            and not any(node.lineno in r for r in home)
+        ):
+            yield node.lineno, "stats re-keyed outside write_index_meta"
+        elif isinstance(node, ast.FunctionDef) and node.name == "ivfpq_append":
+            yield node.lineno, "defines ivfpq_append"
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names = [a.name for a in node.names]
+            if isinstance(node, ast.ImportFrom):
+                names = [f"{node.module}.{n}" for n in names] + [node.module or ""]
+            if any(n.endswith("sinks.swapdir") for n in names):
+                yield node.lineno, "imports sinks.swapdir"
+
+
+def test_stored_index_protocol_has_one_home():
+    """IVF and IVF-PQ share one meta codec (``write_index_meta``
+    stringifies the ``cell_sizes`` keys), one codebook decode (the
+    schema literal is spelt once), one append (``ivf_append``) and one
+    directory swap (``sinks.hadoopfs``)."""
+    files = sorted(PKG.rglob("*.py"))
+    bad = [
+        f"{path.relative_to(ROOT)}:{line}: {what}"
+        for path in files
+        for line, what in _stored_index_forks(path)
+    ]
+    schema = '"sub int, cid int, spos int, c double"'
+    assert bad == []
+    assert sum(path.read_text().count(schema) for path in files) <= 1
 
 
 PARAMS = {"generator": "fake", "n_docs": 10}
